@@ -1026,18 +1026,34 @@ def test_footer_row_bound_fast_path(spark):
 
 def test_gate_small_decides_without_count_job(spark):
     """When the footer bound already clears the threshold, the gate must
-    not run (or memoize) a count job — the r6 fast path. The bound cache
-    fills instead; the count cache entry for this frame stays absent."""
+    not run (or memoize) a count job — the r6 fast path. The count cache
+    entry for this frame stays absent."""
     from wopen_spark.queries import registry
 
     d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     dk = d.select("text").distinct()
     h = dk.semanticHash()
     registry._PER_DISTINCT_COUNT_CACHE.pop(h, None)
-    registry._PER_DISTINCT_BOUND_CACHE.pop(h, None)
     assert registry._gate_small(dk) is True
     assert h not in registry._PER_DISTINCT_COUNT_CACHE
-    assert registry._PER_DISTINCT_BOUND_CACHE.get(h) == d.count()
+
+
+def test_gate_small_sees_rewritten_files(spark, tmp_path, monkeypatch):
+    """Overwriting the files under a path keeps the frame's semanticHash,
+    so the gate must re-read the footers: 10 rows gate small, and the
+    same-hash frame over a 100-row rewrite must not."""
+    from wopen_spark.queries import registry
+
+    monkeypatch.setattr(registry, "_PER_DISTINCT_BROADCAST_MAX_ROWS", 50)
+    monkeypatch.setattr(registry, "_PER_DISTINCT_COUNT_CACHE", {})
+    p = str(tmp_path / "t")
+    spark.range(10).write.parquet(p)
+    small = spark.read.parquet(p)
+    assert registry._gate_small(small) is True
+    spark.range(100).write.mode("overwrite").parquet(p)
+    grown = spark.read.parquet(p)
+    assert grown.semanticHash() == small.semanticHash()
+    assert registry._gate_small(grown) is False
 
 
 def test_retention_cohorts_gate_small_broadcasts(spark):

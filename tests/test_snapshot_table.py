@@ -11,6 +11,7 @@ through checkpoints (O(commits since checkpoint), not O(history)).
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 import pytest
@@ -184,6 +185,40 @@ def test_checkpoint_rollup_and_replay(spark, table):
     ]
     # a version BEFORE the checkpoint still resolves (replay from scratch)
     assert _rows(table.read(version=2).select("id")) == [(0,), (1,)]
+
+
+def test_checkpoint_put_failure_warns_and_commit_stands(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """The checkpoint is written after its commit is published, so a
+    failed put is a WARNING on the package logger, not a failed commit,
+    and state resolution replays the log past the missing rollup."""
+    table = SnapshotTable(spark, str(tmp_path / "tbl"))
+    cp = table._checkpoint_name(CHECKPOINT_EVERY)
+    real_put = table._store.put
+
+    def put(name, data):
+        if name == cp:
+            raise OSError("injected checkpoint put failure")
+        real_put(name, data)
+
+    monkeypatch.setattr(table._store, "put", put)
+    rows = [
+        spark.createDataFrame([(i, "x")], "id long, v string")
+        for i in range(CHECKPOINT_EVERY + 1)
+    ]
+    table.create(rows[0])  # version 1
+    for df in rows[1 : CHECKPOINT_EVERY - 1]:
+        table.append(df)
+    with caplog.at_level(logging.WARNING, logger="wopen_spark"):
+        assert table.append(rows[CHECKPOINT_EVERY - 1]) == CHECKPOINT_EVERY
+    assert not table._store.exists(cp)
+    [rec] = [r for r in caplog.records if r.name.startswith("wopen_spark.")]
+    assert rec.levelno == logging.WARNING
+    assert f"checkpoint {CHECKPOINT_EVERY} of" in rec.getMessage()
+    table.append(rows[CHECKPOINT_EVERY])
+    for v in (CHECKPOINT_EVERY, CHECKPOINT_EVERY + 1):
+        assert _rows(table.read(version=v).select("id")) == [(i,) for i in range(v)]
 
 
 def test_vacuum_removes_unreferenced_files(spark, table):

@@ -79,6 +79,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from wopen_spark.session import default_cpus
 from wopen_spark.snapshot_table import (
     _DV_FILE,
     _DV_ROW,
@@ -254,18 +255,6 @@ _OPEN_COST_BYTES = 4 * 1024 * 1024  # spark.sql.files.openCostInBytes default
 _MAX_TASK_BYTES = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
 
 
-def _min_tasks_default() -> int:
-    """The plan worker has no SparkSession, so the minimum-parallelism
-    floor (Spark's ``leafNodeDefaultParallelism``) comes from the same
-    core-count contract the session factory uses — including its
-    literal default of 32 when SPARK_GRAFT_CPUS is unset
-    (session.py::_DEFAULT_CPUS), so planning and execution agree."""
-    try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:
-        return max(1, os.cpu_count() or 8)
-
-
 def _group_file_entries(
     entries: list[tuple],
     sizes: list[int],
@@ -277,10 +266,12 @@ def _group_file_entries(
     """Pack per-file entries into _FileTask groups by Spark's split
     formula: target = min(maxPartitionBytes, max(openCost,
     (total bytes + n*openCost) / minTasks)). Options ``maxBytesPerTask``
-    / ``minTasks`` override the defaults per read."""
+    / ``minTasks`` override the defaults per read. The plan worker has
+    no SparkSession, so the minTasks default (Spark's
+    ``leafNodeDefaultParallelism``) is the session factory's core count."""
     opts = options or {}
     max_bytes = int(opts.get("maxbytespertask", _MAX_TASK_BYTES))
-    min_tasks = int(opts.get("mintasks", _min_tasks_default()))
+    min_tasks = int(opts.get("mintasks", default_cpus()))
     charged = [s + _OPEN_COST_BYTES for s in sizes]
     target = min(
         max_bytes, max(_OPEN_COST_BYTES, sum(charged) // max(1, min_tasks))

@@ -118,11 +118,6 @@ _PER_DISTINCT_BROADCAST_MAX_ROWS = 100_000
 # snapshot version) at ingest boundaries.
 _PER_DISTINCT_COUNT_CACHE: dict[int, int] = {}
 
-# Footer-derived row BOUNDS (>= true count), memoized separately from
-# real counts — a bound may overestimate, so it must never serve a
-# caller that needs the exact count.
-_PER_DISTINCT_BOUND_CACHE: dict[int, int] = {}
-
 # Logical operators that can only PRESERVE OR SHRINK row count. If a
 # gate frame's optimized plan contains nothing else above its parquet
 # scans, the sum of footer row counts is a valid upper bound on its
@@ -189,18 +184,13 @@ def _distinct_count(dk: DataFrame) -> int:
 
 def _gate_small(dk: DataFrame) -> bool:
     """Is the distinct side small enough to broadcast? Fast path: a
-    parquet-footer row bound — when the bound already clears the
-    threshold the answer is decisive with ZERO Spark jobs (the r5 gate
-    paid one column-pruned count job per key domain per process; small
-    dimensions now pay none). Fallback: the memoized exact count."""
+    parquet-footer row bound, read on every call so a rewrite under the
+    same path is seen — when it clears the threshold the answer is
+    decisive with ZERO Spark jobs. Fallback: the memoized exact count."""
     h = dk.semanticHash()
     n = _PER_DISTINCT_COUNT_CACHE.get(h)
     if n is None:
-        bound = _PER_DISTINCT_BOUND_CACHE.get(h)
-        if bound is None:
-            bound = _footer_row_bound(dk)
-            if bound is not None:
-                _PER_DISTINCT_BOUND_CACHE[h] = bound
+        bound = _footer_row_bound(dk)
         if bound is not None and bound <= _PER_DISTINCT_BROADCAST_MAX_ROWS:
             return True
         n = _distinct_count(dk)

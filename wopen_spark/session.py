@@ -15,9 +15,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Number of local threads == driver-visible CPUs; on a real cluster this is
-# ignored (master comes from the submit environment).
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def default_cpus() -> int:
+    """Local core count (``SPARK_GRAFT_CPUS``, default 32): the session's
+    ``local[N]`` master and shuffle partitions, and the Python
+    datasource's minimum task count. On a real cluster the master comes
+    from the submit environment instead."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def get_spark(app_name: str = "wopen_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -26,7 +30,7 @@ def get_spark(app_name: str = "wopen_spark", shuffle_partitions: int | None = No
     ``shuffle_partitions`` defaults to the local core count; at cluster
     scale set it to ~2-3x total executor cores (AQE coalesces the rest).
     """
-    cpus = int(_DEFAULT_CPUS)
+    cpus = default_cpus()
     # make this package importable by Python workers regardless of the
     # driver's cwd (local-mode workers inherit the process environment)
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -56,6 +56,7 @@ from __future__ import annotations
 
 import io
 import json
+import logging
 import os
 import re
 import shutil
@@ -73,6 +74,8 @@ from pyspark.sql import types as T
 from wopen_spark.localframe import local_df
 
 CHECKPOINT_EVERY = 10
+
+_log = logging.getLogger(__name__)
 
 # Reserved row-identity column names for deletion-vector plumbing; the
 # __sn_ prefix keeps them out of any plausible user schema.
@@ -1553,13 +1556,10 @@ class SnapshotTable:
                     ).encode(),
                 )
             except Exception as e:  # noqa: BLE001 — advisory blob only
-                import sys
-
-                print(
-                    f"warning: checkpoint {version} of {self.path} not "
-                    f"written ({e}); log replay continues from the "
-                    f"previous checkpoint",
-                    file=sys.stderr,
+                _log.warning(
+                    "checkpoint %d of %s not written (%s); log replay "
+                    "continues from the previous checkpoint",
+                    version, self.path, e,
                 )
 
     # ---------------------------------------------------------- data layer
