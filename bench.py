@@ -74,8 +74,8 @@ def main() -> None:
         # proxy objects, and CPython's lazy collection let ~100 queries
         # of sf10 checkpoint blocks accumulate until the ContextCleaner
         # itself OOM'd the 8g heap mid-suite (r7). Intentional suite
-        # caches (CC memo, LSH/trade-pair frames) hold live refs and are
-        # unaffected. Cost: ~ms per query.
+        # caches (the persisted LSH/trade-pair frames) hold live refs and
+        # are unaffected. Cost: ~ms per query.
         del df
         gc.collect()
 

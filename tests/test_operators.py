@@ -801,7 +801,6 @@ def test_inherit_gate_paths_match_raw_join(spark, monkeypatch):
     raw_left = rows(d.join(per, ["k"], "left"))
     for threshold in (100_000, -1):  # broadcast path, then fingerprint path
         monkeypatch.setattr(registry, "_PER_DISTINCT_BROADCAST_MAX_ROWS", threshold)
-        registry._PER_DISTINCT_COUNT_CACHE.clear()
         assert rows(_inherit(d, per, ["k"])) == raw_inner
         assert rows(_inherit(d, per, ["k"], how="left")) == raw_left
     assert raw_inner == {(1, "a", 10), (3, "b", 20), (4, "a", 10)}

@@ -1024,18 +1024,40 @@ def test_footer_row_bound_fast_path(spark):
     assert registry._footer_row_bound(joined) is None
 
 
+def _jobs_in_group(spark, group: str, fn):
+    """Run ``fn()`` under Spark job group ``group``; return its result
+    and the ids of the jobs the group ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_gate_small_decides_without_count_job(spark):
     """When the footer bound already clears the threshold, the gate must
-    not run (or memoize) a count job — the r6 fast path. The count cache
-    entry for this frame stays absent."""
+    not run a count job — the r6 fast path. A row-increasing frame, which
+    has no footer bound, runs its count in the same way and is seen."""
+    from pyspark.sql import functions as F
+
     from wopen_spark.queries import registry
 
     d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     dk = d.select("text").distinct()
-    h = dk.semanticHash()
-    registry._PER_DISTINCT_COUNT_CACHE.pop(h, None)
-    assert registry._gate_small(dk) is True
-    assert h not in registry._PER_DISTINCT_COUNT_CACHE
+    small, jobs = _jobs_in_group(
+        spark, "gate-small-footer", lambda: registry._gate_small(dk)
+    )
+    assert small is True
+    assert jobs == []
+    words = d.select(F.explode(F.split("text", " ")).alias("w")).distinct()
+    small, jobs = _jobs_in_group(
+        spark, "gate-small-counted", lambda: registry._gate_small(words)
+    )
+    assert small is True
+    assert jobs
 
 
 def test_gate_small_sees_rewritten_files(spark, tmp_path, monkeypatch):
@@ -1045,7 +1067,6 @@ def test_gate_small_sees_rewritten_files(spark, tmp_path, monkeypatch):
     from wopen_spark.queries import registry
 
     monkeypatch.setattr(registry, "_PER_DISTINCT_BROADCAST_MAX_ROWS", 50)
-    monkeypatch.setattr(registry, "_PER_DISTINCT_COUNT_CACHE", {})
     p = str(tmp_path / "t")
     spark.range(10).write.parquet(p)
     small = spark.read.parquet(p)

@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wopen_spark.queries.registry import (
-    _distinct_count,
     _gate_small,
     _spread,
     _t,
@@ -678,8 +677,8 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow long key, and no possible broadcast OOM. Gate cost: the
     distinct-user footer bound equals the EVENTS row count (a distinct
     can't be bounded tighter from footers), so past ~100k events the
-    gate pays one column-pruned count job, memoized per process — the
-    price of not hard-coding the broadcast. Both engines truncate weeks
+    gate pays one column-pruned count job per call — the price of not
+    hard-coding the broadcast. Both engines truncate weeks
     to Monday."""
     ev = _t(spark, sf_dir, "events")
     cohort = ev.groupBy("user_id").agg(
@@ -1172,13 +1171,13 @@ def _order_brand_masks(spark: SparkSession, sf_dir: str):
     Precondition ENFORCED below: <=64 distinct brands (the dataset has
     25). Past 64, shiftleft(1L, bit) wraps (shift is mod 64) so bit 64
     would alias bit 0 and counts would silently corrupt; a wider brand
-    universe needs a multi-long mask, so raise instead. The count is
-    memoized by the dim's semantic hash (registry._distinct_count), one
-    tiny column-pruned job per process across the co-occurrence family."""
+    universe needs a multi-long mask, so raise instead. The brands are
+    counted on every call (one tiny column-pruned job), so the guard
+    always sees the current part table."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     brands = p.select("p_brand").distinct()
-    n_brands = _distinct_count(brands)
+    n_brands = brands.count()
     if n_brands > 64:
         raise ValueError(
             f"brand bitmask supports at most 64 distinct brands, found "

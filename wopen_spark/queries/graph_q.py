@@ -14,24 +14,6 @@ from wopen_spark.operators.graph import connected_components, pagerank
 from wopen_spark.queries.dedup import DUCK_LSH_PAIRS, DUCK_LSH_REPS, _lsh_reps
 from wopen_spark.queries.registry import _inherit, _spread, _t, query
 
-# The resolved component frame, memoized per (session, sf_dir): the
-# label-propagation loop is EAGER (per-round convergence collects), and
-# three consumers want its output — the near_dup_components query, and
-# the SQL front-door's near_dup_components view feeding
-# sql_near_dup_components / sql_dedup_clusters. Without the memo each
-# consumer re-runs the whole iteration; with it the process pays once
-# and every later consumer reads the persisted frame (DISK_ONLY:
-# doc-level components are fact-proportional, and fact-proportional
-# suite caches on the heap smeared +2-5 s/query at sf10). Keyed on the
-# Spark APPLICATION id (not id(spark): CPython reuses addresses, so a
-# new session allocated where a stopped one lived would be served the
-# dead session's frame) so a frame from a stopped/other SparkSession is
-# never served. Known limit shared with every plan-level cache: if the
-# parquet under sf_dir is rewritten mid-process, the memo (like Spark's
-# own CacheManager) serves pre-rewrite labels until the process restarts.
-_ND_COMPONENTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 @query(
     "near_dup_components",
     oracle=f"""
@@ -66,22 +48,6 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative's component through one broadcast-size text join, so
     the output stays doc-level. Component ids are min doc_ids, and reps
     are min-per-text, so the labels are identical either way."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _ND_COMPONENTS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # Evict entries from other applications: their frames are unusable
-    # (a stopped session's persisted blocks are gone; a different live
-    # session can't serve this one), and without eviction a long-lived
-    # process cycling sessions accumulates dead refs and — for the rare
-    # same-process multi-session case — dead disk-cache blocks.
-    for stale in [k for k in _ND_COMPONENTS_CACHE if k[0] != app_id]:
-        stale_df = _ND_COMPONENTS_CACHE.pop(stale)
-        try:
-            stale_df.unpersist()
-        except Exception:
-            pass  # session already stopped; blocks died with it
     reps = _lsh_reps(spark, sf_dir)
     pairs = minhash_lsh_candidates(
         reps, id_col="doc_id", text_col="text", n_hashes=8, n_bands=4
@@ -94,16 +60,11 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherited = _inherit(
         d, reps.withColumnRenamed("doc_id", "rep_id"), ["text"]
     )
-    from pyspark import StorageLevel
-
-    out = (
+    return (
         _inherit(inherited, comps.withColumnRenamed("node", "rep_id"), ["rep_id"])
         .select("doc_id", "component")
         .orderBy("doc_id")
-        .persist(StorageLevel.DISK_ONLY)
     )
-    _ND_COMPONENTS_CACHE[key] = out
-    return out
 
 
 def _trade_pair_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

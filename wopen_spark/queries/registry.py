@@ -102,22 +102,6 @@ def _fingerprint(key_cols: list[str]):
 # budget; above it the fingerprint-keyed shuffled join is the safe plan.
 _PER_DISTINCT_BROADCAST_MAX_ROWS = 100_000
 
-# The size-gate count, memoized by the distinct frame's semantic hash:
-# ~20 registered queries gate on the SAME distinct-text set per run, and
-# without the memo each pays one count job (~0.5 s of fixed overhead per
-# query at small SF). The key is plan-derived, so different tables,
-# columns, or sf_dirs never collide; a process restart clears it.
-#
-# Staleness contract: entries live for the PROCESS. If data under the
-# same path is rewritten/grown in-process (a long-lived service
-# re-ingesting), a stale small count keeps choosing the broadcast plan
-# for a now-large frame — results stay correct, but the OOM guard
-# weakens. This engine's query entry points build frames per call from
-# immutable testdata/warehouse snapshots, where the assumption holds; a
-# long-lived service should clear the cache (or key it on table
-# snapshot version) at ingest boundaries.
-_PER_DISTINCT_COUNT_CACHE: dict[int, int] = {}
-
 # Logical operators that can only PRESERVE OR SHRINK row count. If a
 # gate frame's optimized plan contains nothing else above its parquet
 # scans, the sum of footer row counts is a valid upper bound on its
@@ -173,28 +157,15 @@ def _footer_row_bound(dk: DataFrame) -> int | None:
     return total
 
 
-def _distinct_count(dk: DataFrame) -> int:
-    h = dk.semanticHash()
-    n = _PER_DISTINCT_COUNT_CACHE.get(h)
-    if n is None:
-        n = dk.count()
-        _PER_DISTINCT_COUNT_CACHE[h] = n
-    return n
-
-
 def _gate_small(dk: DataFrame) -> bool:
     """Is the distinct side small enough to broadcast? Fast path: a
     parquet-footer row bound, read on every call so a rewrite under the
     same path is seen — when it clears the threshold the answer is
-    decisive with ZERO Spark jobs. Fallback: the memoized exact count."""
-    h = dk.semanticHash()
-    n = _PER_DISTINCT_COUNT_CACHE.get(h)
-    if n is None:
-        bound = _footer_row_bound(dk)
-        if bound is not None and bound <= _PER_DISTINCT_BROADCAST_MAX_ROWS:
-            return True
-        n = _distinct_count(dk)
-    return n <= _PER_DISTINCT_BROADCAST_MAX_ROWS
+    decisive with ZERO Spark jobs. Fallback: an exact count job."""
+    bound = _footer_row_bound(dk)
+    if bound is not None and bound <= _PER_DISTINCT_BROADCAST_MAX_ROWS:
+        return True
+    return dk.count() <= _PER_DISTINCT_BROADCAST_MAX_ROWS
 
 
 def _distinct_spread(d: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -288,9 +259,7 @@ def _inherit(
     itself — right when per is checkpointed or a cheap aggregate).
     When ``per`` is an EXPENSIVE pipeline, pass a same-cardinality
     cheap frame (e.g. the distinct key set of the source table) so the
-    gate doesn't execute the pipeline once just to size it; the count
-    is memoized by semantic hash either way, so gates sharing a key
-    domain pay one job per process."""
+    gate doesn't execute the pipeline once just to size it."""
     if _gate_small(gate if gate is not None else per):
         return d.join(F.broadcast(per), key_cols, how)
     fp = _fingerprint(key_cols)

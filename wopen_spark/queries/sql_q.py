@@ -110,7 +110,7 @@ def sql_near_dup_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r5 verdict #7: the SQL surface must reach the flagship operators, not
 # just dedup. The oracles are SHARED with the DataFrame-API queries
 # (ORACLES lookup) — both surfaces are pinned to the same answer.
-from wopen_spark.queries.registry import ORACLES  # noqa: E402
+from wopen_spark.queries.registry import ORACLES, QUERIES  # noqa: E402
 
 
 @query("sql_fuzzy_top1_type_brand", oracle=ORACLES["fuzzy_top1_type_brand"])
@@ -130,14 +130,18 @@ def sql_fuzzy_top1_type_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("sql_near_dup_components", oracle=ORACLES["near_dup_components"])
 def sql_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clusters from pure SQL: the ITERATIVE
-    connected-components operator resolves once per process (memoized +
-    persisted behind the view) and SQL consumers read the converged
+    connected-components operator converges when the view is built
+    (its label loop runs eagerly), and the SQL query reads the converged
     labels — the pattern for exposing any fixpoint operator to a SQL
-    surface. Same oracle (recursive CTE) as near_dup_components."""
-    return _sql(
-        spark,
-        sf_dir,
-        "SELECT doc_id, component FROM near_dup_components ORDER BY doc_id",
+    surface. Only this query reads the view, so it registers the view
+    itself rather than through ``register_frontdoor``, and every call
+    resolves the components from the current documents. Same oracle
+    (recursive CTE) as near_dup_components."""
+    QUERIES["near_dup_components"](spark, sf_dir).createOrReplaceTempView(
+        "near_dup_components"
+    )
+    return spark.sql(
+        "SELECT doc_id, component FROM near_dup_components ORDER BY doc_id"
     )
 
 
@@ -164,8 +168,7 @@ def sql_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # deliberately NOT register_frontdoor: this query touches only the
     # nation table (read directly) and the two snapshot views it
-    # registers itself — pulling in the full operator-view surface would
-    # pay the eager connected-components resolution for nothing
+    # registers itself
     nation = _t(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -15,32 +15,23 @@ internal exchanges participate in reuse like any DataFrame pipeline.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from wopen_spark.tables import load_testdata
 
-# Connected components is ITERATIVE (each register would rerun the label
-# loop eagerly — its convergence witness collects). The resolved frame
-# is memoized INSIDE the near_dup_components query (per session+sf_dir,
-# DISK_ONLY-persisted), so the suite run and the whole SQL surface
-# share ONE resolution per process: when the registry query already ran
-# in this session, registering the view here is free.
-def _near_dup_components_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wopen_spark.queries.registry import QUERIES
-
-    return QUERIES["near_dup_components"](spark, sf_dir)
-
-
 def register_frontdoor(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register base tables + operator views; returns the view names.
 
-    The operator views reachable from pure SQL now span the flagship
-    families: exact dedup (``doc_fingerprints``), near-dup candidates
-    (``lsh_candidate_pairs``), GRAPH clustering
-    (``near_dup_components``), and SIMILARITY
-    (``fuzzy_type_brand_top1`` — the reference's J8 fuzzy top-1 join as
-    a relation)."""
+    The operator views reachable from pure SQL span exact dedup
+    (``doc_fingerprints``), near-dup candidates
+    (``lsh_candidate_pairs``) and SIMILARITY (``fuzzy_type_brand_top1``
+    — the reference's J8 fuzzy top-1 join as a relation). GRAPH
+    clustering is not registered here: connected components is
+    ITERATIVE (its convergence witness collects every round), so
+    building that view runs the whole loop, which the queries that
+    never read it would pay on every call. ``sql_near_dup_components``
+    registers its own ``near_dup_components`` view instead."""
     from wopen_spark.functions.text import doc_fingerprint
     from wopen_spark.operators.dedup import minhash_lsh_candidates
     from wopen_spark.operators.similarity import fuzzy_top1_join
@@ -56,9 +47,6 @@ def register_frontdoor(spark: SparkSession, sf_dir: str) -> list[str]:
         _lsh_reps(spark, sf_dir), id_col="doc_id", text_col="text",
         n_hashes=8, n_bands=4,
     ).createOrReplaceTempView("lsh_candidate_pairs")
-    _near_dup_components_df(spark, sf_dir).createOrReplaceTempView(
-        "near_dup_components"
-    )
     p = _t(spark, sf_dir, "part")
     fuzzy_top1_join(
         p.select("p_type").distinct(), p.select("p_brand").distinct(),
@@ -69,7 +57,6 @@ def register_frontdoor(spark: SparkSession, sf_dir: str) -> list[str]:
     return [
         "doc_fingerprints",
         "lsh_candidate_pairs",
-        "near_dup_components",
         "fuzzy_type_brand_top1",
     ]
 

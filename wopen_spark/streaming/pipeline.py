@@ -43,25 +43,15 @@ def await_available_now(q, timeout_s: int = 3600) -> None:
         )
 
 
-# One batch-reader probe per (application, sf_dir): resolved ts dtype,
-# table-dir-vs-single-file layout, and Catalyst's relation-size estimate.
-# The streaming family calls event_stream / _suggest_state_partitions
-# 10+ times per suite (the interval join alone probes three times), and
-# each un-memoized probe is a driver-side parquet footer read + file
-# listing — measured ~1 s of the interval-join cell at sf0.1. Same
-# staleness contract as registry._PER_DISTINCT_COUNT_CACHE: sources are
-# immutable snapshots for the process; a long-lived service re-ingesting
-# under the same path should clear this at ingest boundaries. Keyed on
-# applicationId with dead-app eviction so session restarts re-probe and
-# the dict cannot grow without bound.
-_SOURCE_PROBE_CACHE: dict[tuple[str, str], tuple[str, bool, int | None]] = {}
-
-
 def _probe_events_source(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, bool, int | None]:
-    """Probe ``sf_dir/events.parquet`` once per session: returns
-    ``(resolved_ts_dtype, is_table_dir, size_bytes)``.
+    """Probe ``sf_dir/events.parquet``: returns
+    ``(resolved_ts_dtype, is_table_dir, size_bytes)``. A driver-side
+    footer read + file listing, no job; each public entry point probes
+    once per call and hands the tuple to ``event_stream`` and
+    ``_suggest_state_partitions``, so a source rewritten between calls
+    is always seen.
 
     ``size_bytes`` is Catalyst's own file-index relation estimate (the
     number broadcast planning uses — any Hadoop FS, zero jobs), or None
@@ -75,14 +65,6 @@ def _probe_events_source(
     """
     import os
     import warnings
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    hit = _SOURCE_PROBE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for stale in [k for k in _SOURCE_PROBE_CACHE if k[0] != app]:
-        del _SOURCE_PROBE_CACHE[stale]
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
@@ -118,9 +100,7 @@ def _probe_events_source(
             stacklevel=2,
         )
         size = None
-    probe = (resolved, is_table_dir, size)
-    _SOURCE_PROBE_CACHE[key] = probe
-    return probe
+    return resolved, is_table_dir, size
 
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
@@ -136,7 +116,7 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def event_stream(spark: SparkSession, sf_dir: str, probe=None) -> DataFrame:
     """The events table as a file stream (one file today; a directory that
     keeps growing in production — the checkpoint tracks processed files).
 
@@ -146,12 +126,14 @@ def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema, so probe the batch reader's resolved type once (footer-only,
     no data scan) and build the matching stream schema; either way the
     stream exposes ``ts`` as a session-TZ TimestampType for
-    watermarks/windows — mirroring queries.registry._t.
+    watermarks/windows — mirroring queries.registry._t. ``probe`` is the
+    caller's ``_probe_events_source`` tuple; without one, probe here (a
+    missing source raises).
     """
     import os
 
     path = os.path.join(sf_dir, "events.parquet")
-    resolved, is_table_dir, _ = _probe_events_source(spark, sf_dir)
+    resolved, is_table_dir, _ = probe or _probe_events_source(spark, sf_dir)
 
     def _reader(schema):
         if is_table_dir:
@@ -170,6 +152,21 @@ def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = _reader(_events_schema(ts_type))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _events_source(spark: SparkSession, sf_dir: str, stream_factory=None):
+    """``(probe, make)`` for an entry point's one source probe: ``make()``
+    builds the events stream, or ``stream_factory``'s override. Without
+    a factory the stream needs the probe, so a missing source raises;
+    with one the probe only sizes state partitions, so an unprobeable
+    source gives ``probe=None`` (the capped default)."""
+    if stream_factory is not None:
+        try:
+            return _probe_events_source(spark, sf_dir), stream_factory
+        except Exception:  # noqa: BLE001 — non-parquet/missing source
+            return None, stream_factory
+    probe = _probe_events_source(spark, sf_dir)
+    return probe, lambda: event_stream(spark, sf_dir, probe)
 
 
 def windowed_counts(
@@ -233,7 +230,7 @@ class _state_partitions:
 _STATE_PER_CORE_MIN_BYTES = 64 * 1024 * 1024
 
 
-def _suggest_state_partitions(spark: SparkSession, sf_dir: str) -> int | None:
+def _suggest_state_partitions(spark: SparkSession, probe) -> int | None:
     """State-partition count sized to the INPUT, decided driver-side with
     ZERO jobs: Catalyst's own relation-size estimate (the number its
     broadcast planning uses — file-index metadata, any Hadoop FS). A
@@ -241,12 +238,10 @@ def _suggest_state_partitions(spark: SparkSession, sf_dir: str) -> int | None:
     per-core partitioning only pays for itself once the stateful shuffle
     is large. Measured on 32 cores: the 60M-event sessionizer needs
     per-core (101.5 -> 74.7 s), while per-core on the 600k-event family
-    costs +8 s of pure provider overhead. None (-> the capped default)
-    when the source can't be sized."""
-    try:
-        _, _, size = _probe_events_source(spark, sf_dir)
-    except Exception:  # noqa: BLE001 — non-parquet/missing source: default
-        return None
+    costs +8 s of pure provider overhead. ``probe`` is the entry point's
+    ``_probe_events_source`` tuple; None (-> the capped default) when
+    the source can't be probed or sized."""
+    size = probe[2] if probe is not None else None
     if size is not None and size >= _STATE_PER_CORE_MIN_BYTES:
         return int(spark.sparkContext.defaultParallelism)
     return None
@@ -264,8 +259,11 @@ def available_now_aggregate(
     stop (AvailableNow) — the engine's replacement for the reference's
     cron + partition-ledger loop. Returns the result of this run from the
     in-memory sink."""
-    agg = windowed_counts(event_stream(spark, sf_dir), window=window, slide=slide)
-    with _state_partitions(spark, _suggest_state_partitions(spark, sf_dir)):
+    probe = _probe_events_source(spark, sf_dir)
+    agg = windowed_counts(
+        event_stream(spark, sf_dir, probe), window=window, slide=slide
+    )
+    with _state_partitions(spark, _suggest_state_partitions(spark, probe)):
         q = (
             agg.writeStream.format("memory")
             .queryName(query_name)
@@ -300,7 +298,7 @@ def available_now_interval_join(
     directory with maxFilesPerTrigger=1 to exercise cross-batch join state
     and watermark-driven eviction over >1 micro-batch).
     """
-    make = stream_factory or (lambda: event_stream(spark, sf_dir))
+    probe, make = _events_source(spark, sf_dir, stream_factory)
     clicks = (
         make()
         .filter(F.col("event_type") == "click")
@@ -335,7 +333,7 @@ def available_now_interval_join(
             "gap_us"
         ),
     )
-    with _state_partitions(spark, _suggest_state_partitions(spark, sf_dir)):
+    with _state_partitions(spark, _suggest_state_partitions(spark, probe)):
         q = (
             joined.writeStream.format("memory")
             .queryName("wopen_stream_interval_join")
@@ -380,9 +378,10 @@ def available_now_to_table(
             table.write_partition(day, partition_field, rows)
             written.append(day)
 
-    with _state_partitions(spark, _suggest_state_partitions(spark, sf_dir)):
+    probe = _probe_events_source(spark, sf_dir)
+    with _state_partitions(spark, _suggest_state_partitions(spark, probe)):
         q = (
-            event_stream(spark, sf_dir)
+            event_stream(spark, sf_dir, probe)
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
@@ -406,13 +405,14 @@ def available_now_distinct(
     test file is one micro-batch, so the output must equal batch
     SELECT DISTINCT — which is what the oracle asserts."""
     keys = keys or ["user_id", "event_type"]
-    stream = event_stream(spark, sf_dir)
+    probe = _probe_events_source(spark, sf_dir)
+    stream = event_stream(spark, sf_dir, probe)
     dedup = (
         stream.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(keys)
         .select(*keys)
     )
-    with _state_partitions(spark, _suggest_state_partitions(spark, sf_dir)):
+    with _state_partitions(spark, _suggest_state_partitions(spark, probe)):
         q = (
             dedup.writeStream.format("memory")
             .queryName("wopen_stream_distinct")
@@ -465,7 +465,8 @@ def available_now_stream_static_join(
         dim_bytes = None
     small = dim_bytes is not None and dim_bytes <= _STREAM_DIM_BROADCAST_MAX_BYTES
 
-    purchases = event_stream(spark, sf_dir).filter(
+    probe = _probe_events_source(spark, sf_dir)
+    purchases = event_stream(spark, sf_dir, probe).filter(
         F.col("event_type") == "purchase"
     )
     dim = spark.read.parquet(dim_path).select("c_custkey", "c_mktsegment")
@@ -477,7 +478,7 @@ def available_now_stream_static_join(
         F.count(F.lit(1)).alias("n_purchases"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
     )
-    with _state_partitions(spark, _suggest_state_partitions(spark, sf_dir)):
+    with _state_partitions(spark, _suggest_state_partitions(spark, probe)):
         q = (
             agg.writeStream.format("memory")
             .queryName("wopen_stream_static_join")

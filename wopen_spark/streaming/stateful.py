@@ -245,20 +245,20 @@ def sessionize_available_now(
     API: ``classic`` = applyInPandasWithState, ``tws`` = Spark 4's
     transformWithStateInPandas — same shared core, same output."""
     from wopen_spark.streaming.pipeline import (
+        _events_source,
         _state_partitions,
         _suggest_state_partitions,
         await_available_now,
-        event_stream,
     )
 
     if impl not in ("classic", "tws"):
         raise ValueError(f"impl must be 'classic' or 'tws', got {impl!r}")
-    make = stream_factory or (lambda: event_stream(spark, sf_dir))
+    probe, make = _events_source(spark, sf_dir, stream_factory)
     ev = make().select("user_id", "ts", "value")
     op = sessionize if impl == "classic" else sessionize_tws
     sessions = op(ev, gap_seconds=gap_seconds)
     sink = f"wopen_sessions_{impl}"
-    with _state_partitions(spark, _suggest_state_partitions(spark, sf_dir)):
+    with _state_partitions(spark, _suggest_state_partitions(spark, probe)):
         q = (
             sessions.writeStream.format("memory")
             .queryName(sink)
