@@ -8,6 +8,10 @@ driver — via Arrow (toPandas) so the transfer measures columnar batches,
 not row-at-a-time pickling; row-Row collect() is the fallback for any
 plan Arrow can't carry. The measurement covers the full plan, not just
 plan construction.
+
+BENCH_FULL.json holds every query's wall seconds (``queries``) and the
+number of Spark jobs its cell ran (``jobs``, read from the status store
+for the cell's job group; ``total_jobs`` is their sum).
 """
 
 from __future__ import annotations
@@ -55,8 +59,14 @@ def main() -> None:
             except Exception:  # noqa: BLE001 — warmup is best-effort
                 pass
 
+    sc = spark.sparkContext
     timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     for name, fn in qs.items():
+        # each cell runs in its own job group, so its Spark job count is
+        # read back from the status store (the unit of fixed cost here)
+        group = f"bench-{name}"
+        sc.setJobGroup(group, name)
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
@@ -64,11 +74,17 @@ def main() -> None:
                 _ = len(df.toPandas())
             except Exception:  # noqa: BLE001 — Arrow-incompatible result
                 _ = len(df.collect())
+            timings[name] = round(time.perf_counter() - t0, 3)
         except Exception as e:  # noqa: BLE001
             print(f"bench error in {name}: {e}", file=sys.stderr)
             timings[name] = -1.0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        if timings[name] < 0:
             continue
-        timings[name] = round(time.perf_counter() - t0, 3)
         # drop the query's py4j refs NOW: JVM blocks (localCheckpoints,
         # per-query persists) stay pinned until Python GC releases the
         # proxy objects, and CPython's lazy collection let ~100 queries
@@ -94,7 +110,15 @@ def main() -> None:
     try:
         with open(full_path, "w") as f:
             json.dump(
-                {"total_sec": total, "sf": sf_val, "queries": timings}, f, indent=1
+                {
+                    "total_sec": total,
+                    "sf": sf_val,
+                    "queries": timings,
+                    "total_jobs": sum(jobs.values()),
+                    "jobs": jobs,
+                },
+                f,
+                indent=1,
             )
     except OSError:
         full_path = None

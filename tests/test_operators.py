@@ -936,6 +936,53 @@ def test_connected_components_string_ids(spark):
     assert comp["aa"] != comp["dd"]
 
 
+def _random_graph(seed: int, n_nodes: int = 40, n_edges: int = 30):
+    """A seeded sparse edge list with self-loops, duplicate and reversed
+    edges: every input shape the symmetrize + dedup step must absorb."""
+    import random
+
+    rng = random.Random(seed)
+    edges = [tuple(rng.sample(range(n_nodes), 2)) for _ in range(n_edges)]
+    edges += [(v, v) for v in rng.sample(range(n_nodes), 3)]
+    edges += rng.sample(edges, 5) + [(b, a) for a, b in rng.sample(edges, 5)]
+    rng.shuffle(edges)
+    return edges
+
+
+def test_connected_components_driver_matches_distributed(spark, monkeypatch):
+    """The driver union-find path and the distributed min-label loop give
+    identical (node, component) sets. The loop is forced by a zero driver
+    bound, which no non-empty edge list fits."""
+    import hashlib
+
+    from wopen_spark.operators import graph
+
+    def components(rows, schema, **kw):
+        df = spark.createDataFrame(rows, schema)
+        return {tuple(r) for r in graph.connected_components(df, **kw).collect()}
+
+    def md5(v):
+        return hashlib.md5(str(v).encode()).hexdigest()
+
+    edges = _random_graph(seed=1)
+    sym = sorted({(a, b) for e in edges for a, b in (e, e[::-1])})
+    chain = [(i, i + 1) if i % 2 else (i + 1, i) for i in range(29)]  # 30 nodes
+    cases = [
+        (edges, "id_a long, id_b long", {}),
+        # md5 ids order differently from the ints they hash
+        ([(md5(a), md5(b)) for a, b in edges], "id_a string, id_b string", {}),
+        (sym, "id_a long, id_b long", {"symmetric_distinct": True}),
+        (chain, "id_a long, id_b long", {"max_iterations": 40}),
+    ]
+    on_driver = [components(rows, schema, **kw) for rows, schema, kw in cases]
+    assert {c for _, c in on_driver[-1]} == {0}  # the chain is one component
+    monkeypatch.setattr(graph, "_DRIVER_EDGES_MAX_ROWS", 0)
+    for (rows, schema, kw), want in zip(cases, on_driver):
+        assert components(rows, schema, **kw) == want, (schema, kw)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        components(chain, "id_a long, id_b long", max_iterations=5)
+
+
 def test_prefix_filter_boundary_threshold_exact(spark):
     """0.07*100 = 7.000000000000001 in IEEE doubles: a raw ceil() would
     demand overlap 8 and silently drop a J=0.07 pair. The epsilon guard

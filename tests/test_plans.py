@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 from wopen_spark.plans import (
     exchanges,
     join_strategies,
@@ -289,17 +289,44 @@ def test_partitioned_table_read_prunes_partitions(spark, tmp_path):
     assert all("date_extract" not in f for f in data_filters)
 
 
-def test_minhash_rep_dedup_exchange_is_reused(spark):
-    """Clone-collapse shape: the distinct-text groupBy feeds BOTH sides
-    of the band self-join through ONE exchange — a regression to two
-    independent scans+shuffles of the corpus doubles the dominant cost
-    at 100 TB."""
+def _final_plan_nodes(df):
+    """Every node of the AQE-final executed plan (runs the query): the
+    final plan of each adaptive plan, the plan inside each query stage
+    and the plan of each cached relation read. A reused exchange is a
+    leaf, so what it reuses is not walked twice."""
     from wopen_spark.plans import executed_plan_string
 
-    plan = executed_plan_string(_q(spark, "minhash_lsh_candidate_pairs"))
-    assert "ReusedExchange" in plan
+    executed_plan_string(df)  # runs the query
+    conv = df.sparkSession._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def walk(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            yield from walk(node.executedPlan())
+            return
+        if name.endswith("QueryStage"):
+            yield from walk(node.plan())
+            return
+        yield node
+        if name == "InMemoryTableScan":
+            yield from walk(node.relation().cachedPlan())
+        for child in conv.asJava(node.children()):
+            yield from walk(child)
+
+    return list(walk(df._jdf.queryExecution().executedPlan()))
+
+
+def test_minhash_lsh_signatures_computed_once(spark):
+    """The MinHash signature subtree runs ONCE: the band keys are grouped
+    into buckets, not self-joined — a self-join that AQE turns into a
+    broadcast recomputes the signatures on each arm, and no exchange
+    reuse can fold them."""
+    nodes = _final_plan_nodes(_q(spark, "minhash_lsh_candidate_pairs"))
+    sig = [n for n in nodes if "aggregate(array_distinct(" in n.simpleString(1000)]
+    assert len(sig) == 1, [n.nodeName() for n in sig]
     # and the >=3-words guard still reaches the scan as a data filter
-    assert "regexp_extract_all" in plan.split("FileScan", 1)[1].split("\n", 1)[0]
+    (scan,) = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
+    assert "regexp_extract_all" in scan.simpleString(1000)
 
 
 def test_embedding_lsh_scoring_computed_once(spark):
@@ -1034,6 +1061,8 @@ def _jobs_in_group(spark, group: str, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -1058,6 +1087,118 @@ def test_gate_small_decides_without_count_job(spark):
     )
     assert small is True
     assert jobs
+
+
+def test_t_single_file_runs_no_job(spark):
+    """``_t`` hands Spark the footer schema of a single-file table, so
+    building the frame runs no schema-inference job; inferring the same
+    file does run one."""
+    from wopen_spark.queries.registry import _t
+    from wopen_spark.tables import TESTDATA_TABLES
+
+    for name in TESTDATA_TABLES:
+        _, jobs = _jobs_in_group(
+            spark, f"t-footer-{name}", lambda: _t(spark, SF_SMOKE, name)
+        )
+        assert jobs == [], name
+    _, jobs = _jobs_in_group(
+        spark,
+        "t-inferred",
+        lambda: spark.read.parquet(f"{SF_SMOKE}/documents.parquet"),
+    )
+    assert jobs
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_CORRECT])
+def test_t_footer_schema_equals_inferred(spark, sf_dir):
+    """For every test table the footer schema is taken and equals what
+    ``spark.read.parquet`` infers, nullability included."""
+    import os
+
+    from wopen_spark.queries.registry import _footer_schema, _t
+    from wopen_spark.tables import TESTDATA_TABLES
+
+    for name in TESTDATA_TABLES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        assert _footer_schema(spark, path) is not None, name
+        assert _t(spark, sf_dir, name).schema == spark.read.parquet(path).schema, name
+
+
+def test_t_footer_schema_fallbacks(spark, tmp_path):
+    """A Spark-written file's footer schema comes from Spark's row
+    metadata; a directory and a nanosecond-timestamp events file fall
+    back to inference, which reads the events ts as longs that ``_t``
+    converts to microseconds."""
+    import datetime
+    import glob
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from wopen_spark.queries.registry import _footer_schema, _t
+
+    spark.sql(
+        "SELECT id, CAST(id AS DECIMAL(12, 2)) AS amount, "
+        "TIMESTAMP'2024-01-01 00:00:00' AS ts FROM range(3)"
+    ).coalesce(1).write.parquet(str(tmp_path / "written"))
+    (part,) = glob.glob(str(tmp_path / "written" / "*.parquet"))
+    single = tmp_path / "sf"
+    single.mkdir()
+    shutil.copy(part, single / "amounts.parquet")
+    path = str(single / "amounts.parquet")
+    assert b"org.apache.spark.sql.parquet.row.metadata" in pq.read_schema(path).metadata
+    assert _footer_schema(spark, path) is not None
+    assert _t(spark, str(single), "amounts").schema == spark.read.parquet(path).schema
+
+    # a table directory: inferred
+    spark.range(3).write.parquet(str(single / "ranged.parquet"))
+    assert _footer_schema(spark, str(single / "ranged.parquet")) is None
+    assert _t(spark, str(single), "ranged").schema == spark.read.parquet(
+        str(single / "ranged.parquet")
+    ).schema
+
+    # a TIMESTAMP(NANOS) events file: inferred as longs, converted by _t
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1], pa.int64()),
+                "ts": pa.array([ts], pa.timestamp("ns")),
+            }
+        ),
+        str(single / "events.parquet"),
+    )
+    assert pq.read_schema(str(single / "events.parquet")).field("ts").type.unit == "ns"
+    assert _footer_schema(spark, str(single / "events.parquet")) is None
+    events = _t(spark, str(single), "events")
+    assert events.schema["ts"].dataType == T.TimestampType()
+    (micros,) = events.select(F.unix_micros("ts")).first()
+    assert micros == (ts - datetime.datetime(1970, 1, 1)) // datetime.timedelta(
+        microseconds=1
+    )
+
+
+def test_connected_components_bounded_graph_runs_one_job(spark):
+    """A candidate graph within the driver bound costs ONE Spark job: the
+    bounded fetch. Union-find resolves it on the driver and the result is
+    a local relation, so reading it back runs nothing more."""
+    from wopen_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(5, 3), (3, 9), (9, 7), (20, 21)], "id_a long, id_b long"
+    ).localCheckpoint()
+    comps, jobs = _jobs_in_group(
+        spark, "cc-driver", lambda: connected_components(edges)
+    )
+    assert len(jobs) == 1
+    rows, jobs = _jobs_in_group(spark, "cc-driver-read", comps.collect)
+    assert jobs == []
+    assert {tuple(r) for r in rows} == {
+        (3, 3), (5, 3), (7, 3), (9, 3), (20, 20), (21, 20),
+    }
 
 
 def test_gate_small_sees_rewritten_files(spark, tmp_path, monkeypatch):

@@ -8,9 +8,9 @@ whole-stage codegen and scale linearly with executors.
 Scale notes (100 TB):
 - exact dedup = one shuffle on the 128-bit fingerprint; skew-free since
   fingerprints are uniform.
-- MinHash+LSH = per-row signature (map-only) + one shuffle per band on the
-  band key; candidate verification touches only bucket collisions, never
-  the O(n²) pair space.
+- MinHash+LSH = per-row signature (map-only) + one shuffle on the band
+  key; candidate verification touches only bucket collisions, never the
+  O(n²) pair space.
 - SimHash = map-only fingerprint; near-dup lookup via Hamming bands.
 """
 
@@ -91,14 +91,15 @@ def lsh_band_keys(
     A slice containing any NULL element (doc too short to shingle)
     yields a NULL band key: ``array_join``/``concat_ws`` would silently
     SKIP nulls, so every shingle-less doc would otherwise share
-    identical band keys and the downstream self-join would materialize
-    an O(k²) clique of short docs. NULL keys never match an equi-join,
-    so such docs simply drop out — the safe default for any caller
-    composing the public helpers directly (minhash_lsh_candidates
-    additionally pre-filters). The null-propagation is ``concat`` over
-    statically-unrolled ``element_at`` slots, NOT a when(exists(...))
-    branch — conditionals defeat common-subexpression elimination and
-    were measured recomputing the md5-signature tree per band."""
+    identical band keys and the downstream bucketing would materialize
+    an O(k²) clique of short docs. NULL keys never match an equi-join
+    and form no bucket, so such docs simply drop out — the safe default
+    for any caller composing the public helpers directly
+    (minhash_lsh_candidates additionally pre-filters). The
+    null-propagation is ``concat`` over statically-unrolled
+    ``element_at`` slots, NOT a when(exists(...)) branch — conditionals
+    defeat common-subexpression elimination and were measured
+    recomputing the md5-signature tree per band."""
     out = []
     for b in range(n_bands):
         parts: list[Column] = [F.lit(str(b))]
@@ -120,10 +121,14 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding.
 
-    Explodes each doc into ``n_bands`` (band, key) rows, self-joins on the
-    band key (shuffle on uniform md5 keys — skew-free), and returns
-    distinct candidate id pairs with ``id_a < id_b``. At 100 TB this is
-    the only join that happens, and it only sees colliding buckets.
+    Explodes each doc into ``n_bands`` (band, key) rows, groups them into
+    buckets by band key (one shuffle on uniform md5 keys), and emits the
+    ``id_a < id_b`` pairs inside each bucket; returns the distinct
+    candidate id pairs. The signatures are computed once: a band-key
+    self-join would run the signature subtree once per join side whenever
+    AQE plans the join as a broadcast, which defeats exchange reuse. A
+    bucket's ids are collected on one task, so the pairs only ever come
+    from colliding buckets, never the O(n²) pair space.
     """
     if n_hashes % n_bands:
         raise ValueError(
@@ -141,21 +146,24 @@ def minhash_lsh_candidates(
     enough_words = F.regexp_count(F.col(text_col), F.lit(r"\S+")) >= F.lit(shingle_size)
     sigs = minhash_signatures(df.filter(enough_words), text_col, n_hashes, shingle_size)
     keys = lsh_band_keys(F.col("minhash"), n_bands, rows)
-    banded = sigs.select(
-        F.col(id_col),
-        F.explode(F.array(*keys)).alias("band_key"),
+    # a NULL band key collides with nothing (see lsh_band_keys), so it
+    # must not form a bucket of its own
+    buckets = (
+        sigs.select(F.col(id_col), F.explode(F.array(*keys)).alias("band_key"))
+        .filter(F.col("band_key").isNotNull())
+        .groupBy("band_key")
+        .agg(F.collect_list(id_col).alias("ids"))
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(b, "band_key")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+    in_bucket = F.flatten(
+        F.transform(
+            "ids",
+            lambda x: F.transform(
+                F.filter("ids", lambda y: x < y),
+                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+            ),
         )
-        .distinct()
     )
+    pairs = buckets.select(F.inline(in_bucket)).distinct()
     # CACHED by default (the connected_components edge-cache pattern):
     # six registered queries + the SQL front-door views derive this
     # exact candidate-pair plan, and the CacheManager serves them all

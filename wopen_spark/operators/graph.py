@@ -1,22 +1,32 @@
-"""Iterative graph operator: connected components by min-label
-propagation — the dedup-clustering step that turns near-dup candidate
-PAIRS into GROUPS (transitively: if A~B and B~C, then {A,B,C} is one
-duplicate cluster to keep one document from).
+"""Iterative graph operator: connected components — the dedup-clustering
+step that turns near-dup candidate PAIRS into GROUPS (transitively: if
+A~B and B~C, then {A,B,C} is one duplicate cluster to keep one document
+from).
 
-Scale shape: each iteration is one distributed join + aggregate on the
-symmetrized edge list (uniform keys); labels converge in O(component
-diameter) iterations — near-dup clusters are shallow, so single digits in
-practice. ``localCheckpoint`` truncates the lineage each round so the
-plan doesn't grow with the iteration count (the classic iterative-DataFrame
-pitfall). For planet-scale graphs the alternating large-star/small-star
-variant halves rounds; min-label is the right trade at dedup-cluster
-shapes.
+Scale shape: a candidate graph of at most ``_DRIVER_EDGES_MAX_ROWS`` edges
+(the engine's driver budget, the same 100k rows the broadcast gates use)
+is fetched in ONE job and resolved on the driver by union-find — at the
+sizes the dedup queries produce, a distributed loop pays one Spark job per
+round for kilobytes of data. Larger graphs run min-label propagation:
+each iteration is one distributed join + aggregate on the symmetrized
+edge list (uniform keys); labels converge in O(component diameter)
+iterations — near-dup clusters are shallow, so single digits in practice.
+``localCheckpoint`` truncates the lineage each round so the plan doesn't
+grow with the iteration count (the classic iterative-DataFrame pitfall).
+For planet-scale graphs the alternating large-star/small-star variant
+halves rounds; min-label is the right trade at dedup-cluster shapes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Edge count up to which connected_components resolves on the driver:
+# the engine's driver-side row budget (queries.registry's
+# _PER_DISTINCT_BROADCAST_MAX_ROWS).
+_DRIVER_EDGES_MAX_ROWS = 100_000
 
 
 def connected_components(
@@ -29,14 +39,85 @@ def connected_components(
     """Return (node, component) where component = min node id reachable.
 
     ``edges`` is an undirected edge list (any orientation). Isolated
-    nodes don't appear — callers union them in if needed.
+    nodes don't appear — callers union them in if needed. An edge with a
+    NULL endpoint connects nothing (NULL never equi-matches); a NULL node
+    is reported with a NULL component.
+
+    One ``limit(B + 1)`` fetch both sizes and fetches the edge list
+    (B = ``_DRIVER_EDGES_MAX_ROWS``). At most B edges resolve on the
+    driver by union-find and come back as a JVM-side frame built from an
+    Arrow table: the call runs that one job (plus the stages of the edge
+    frame's own plan) and caches nothing. More than B edges run the
+    distributed min-label loop, which raises ``RuntimeError`` when
+    ``max_iterations`` rounds do not reach the fixpoint; the driver path
+    has no rounds to bound.
 
     ``symmetric_distinct=True``: the caller guarantees the input already
     holds BOTH orientations of every edge exactly once (e.g. a subgraph
-    of an already-symmetrized, deduped neighborhood list) — skip the
-    union + dedup entirely, one |edges| shuffle saved at any scale.
+    of an already-symmetrized, deduped neighborhood list) — the
+    distributed path skips the union + dedup entirely, one |edges|
+    shuffle saved at any scale.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    if not symmetric_distinct:
+        e = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    bounded = edges.select(src, dst).limit(_DRIVER_EDGES_MAX_ROWS + 1).toArrow()
+    if bounded.num_rows <= _DRIVER_EDGES_MAX_ROWS:
+        return _components_on_driver(edges.sparkSession, bounded, e.schema["a"])
+    return _min_label_components(e, max_iterations, symmetric_distinct)
+
+
+def _components_on_driver(spark, edges, node_field) -> DataFrame:
+    """Union-find over a fetched Arrow edge table: every root is the
+    minimum id of its component (the larger root always hangs under the
+    smaller), so ``find`` IS the min-label fixpoint. Python compares
+    longs numerically and strings by code point, which is Spark's
+    UTF-8 binary order."""
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    has_null = False
+    for a, b in zip(edges.column(0).to_pylist(), edges.column(1).to_pylist()):
+        if a is None or b is None:
+            has_null = True
+            for x in (a, b):
+                if x is not None:
+                    parent.setdefault(x, x)
+            continue
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    nodes = list(parent)
+    comps = [find(x) for x in nodes]
+    if has_null:
+        nodes.append(None)
+        comps.append(None)
+    schema = T.StructType(
+        [
+            T.StructField("node", node_field.dataType),
+            T.StructField("component", node_field.dataType),
+        ]
+    )
+    table = pa.table({"node": nodes, "component": comps})
+    return spark.createDataFrame(table, schema)
+
+
+def _min_label_components(
+    e: DataFrame, max_iterations: int, symmetric_distinct: bool
+) -> DataFrame:
+    """The distributed path of :func:`connected_components`: min-label
+    propagation over the (already symmetrized) edge list ``e(a, b)``."""
     # materialize the edge list once: it is re-joined EVERY round, and an
     # expensive upstream (e.g. the LSH candidate pipeline) would otherwise
     # be recomputed per iteration
@@ -53,12 +134,7 @@ def connected_components(
         # one |edges| shuffle total instead of a hash(a,b) distinct
         # exchange followed by the hash(b) repartition (the pagerank
         # operator's cached-invariant trick)
-        sym = (
-            e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .repartition("b")
-            .dropDuplicates(["a", "b"])
-            .persist()
-        )
+        sym = e.repartition("b").dropDuplicates(["a", "b"]).persist()
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -121,7 +197,8 @@ def connected_components(
         )
     # Eagerly checkpoint the final labels (|nodes|-sized, one cheap job)
     # so the result survives independent of the loop lineage, then leave
-    # sym CACHED on purpose. Unpersisting here was measured 2x slower
+    # sym CACHED on purpose (this path only: the driver path caches
+    # nothing). Unpersisting here was measured 2x slower
     # across the CC query family: five registered queries build the SAME
     # candidate graph, and Spark's CacheManager serves them all from one
     # cache entry via canonical-plan matching — an entry repeated calls
@@ -386,9 +463,9 @@ def dbscan_from_pairs(
     )
     if not materialize:
         # plan-inspection escape hatch: the lazy plan keeps the full
-        # candidate-join lineage visible to explain(); nothing runs, so
-        # the persist above never occupies storage. Callers that DO run
-        # the lazy plan own releasing sym themselves.
+        # candidate-join lineage visible to explain(). connected_components
+        # has already read the core subgraph, which fills sym's cache, so
+        # callers taking this path own releasing sym themselves.
         return out
     # materialize the labels (|clustered points|-sized, one job) and
     # release the cached neighborhood — unlike connected_components'

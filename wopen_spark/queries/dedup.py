@@ -176,8 +176,9 @@ _DUCK_SLOTS_8 = ", ".join(
 # keys, forcing ~25M pairs at sf10 that say nothing beyond "these bytes
 # are equal" (doc_fingerprint_dedup's job). LSH runs over one
 # min-doc_id representative per distinct text; at 100 TB you never
-# re-signature identical bytes. The rep groupBy is one shuffle whose
-# exchange Catalyst reuses for both sides of the band self-join.
+# re-signature identical bytes. The rep groupBy is one shuffle, and each
+# rep's signature is computed once (the band keys are bucketed by a
+# groupBy, not self-joined).
 DUCK_LSH_REPS = f"""
     reps AS (
       SELECT min(doc_id) AS doc_id, text FROM documents

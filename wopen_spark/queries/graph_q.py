@@ -40,14 +40,16 @@ from wopen_spark.queries.registry import _inherit, _spread, _t, query
     """,
 )
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup clustering: min-label propagation over the rep-level LSH
-    candidate graph (one join+agg per iteration, lineage checkpointed)
-    vs. a recursive-CTE transitive closure in DuckDB. The iterative part
-    runs on the DISTINCT-text graph (4 orders of magnitude smaller than
-    the doc count on clone-heavy corpora); every doc then inherits its
-    representative's component through one broadcast-size text join, so
-    the output stays doc-level. Component ids are min doc_ids, and reps
-    are min-per-text, so the labels are identical either way."""
+    """Dedup clustering: connected components over the rep-level LSH
+    candidate graph (union-find on the driver for a graph within the
+    driver budget, else min-label propagation, one join+agg per
+    iteration) vs. a recursive-CTE transitive closure in DuckDB. The
+    clustering runs on the DISTINCT-text graph (4 orders of magnitude
+    smaller than the doc count on clone-heavy corpora); every doc then
+    inherits its representative's component through one broadcast-size
+    text join, so the output stays doc-level. Component ids are min
+    doc_ids, and reps are min-per-text, so the labels are identical
+    either way."""
     reps = _lsh_reps(spark, sf_dir)
     pairs = minhash_lsh_candidates(
         reps, id_col="doc_id", text_col="text", n_hashes=8, n_bands=4

@@ -60,7 +60,7 @@ def sql_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sql_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash+LSH banding operator consumed as a plain SQL relation:
-    SELECT over the lsh_candidate_pairs view. The banded self-join,
+    SELECT over the lsh_candidate_pairs view. The band-key bucketing,
     clone-collapse reps, and short-doc guard all live in the view's
     logical plan."""
     return _sql(

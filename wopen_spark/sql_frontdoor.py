@@ -27,10 +27,10 @@ def register_frontdoor(spark: SparkSession, sf_dir: str) -> list[str]:
     (``doc_fingerprints``), near-dup candidates
     (``lsh_candidate_pairs``) and SIMILARITY (``fuzzy_type_brand_top1``
     — the reference's J8 fuzzy top-1 join as a relation). GRAPH
-    clustering is not registered here: connected components is
-    ITERATIVE (its convergence witness collects every round), so
-    building that view runs the whole loop, which the queries that
-    never read it would pay on every call. ``sql_near_dup_components``
+    clustering is not registered here: building a connected-components
+    frame runs Spark jobs (the bounded edge fetch, or the distributed
+    loop's per-round witness), which the queries that never read the
+    view would pay on every call. ``sql_near_dup_components``
     registers its own ``near_dup_components`` view instead."""
     from wopen_spark.functions.text import doc_fingerprint
     from wopen_spark.operators.dedup import minhash_lsh_candidates
