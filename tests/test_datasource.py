@@ -107,6 +107,38 @@ def test_pushdown_never_skips_on_type_mismatch(ds_spark, tmp_path):
     assert len(r.partitions()) == 1  # kept: probe type is str, stats are int
 
 
+def test_pushdown_reads_each_bloom_sidecar_once(ds_spark, tmp_path, monkeypatch):
+    """Bloom sidecars are immutable, so the pushdown reader serves them
+    from the table handle's cache: a second plan of the same point probe
+    opens no sidecar and plans the same files."""
+    from wopen_spark.snapshot_table import LocalDataStore
+
+    t = SnapshotTable(ds_spark, str(tmp_path / "t"))
+    df = ds_spark.range(0, 400).select(
+        F.col("id").cast("long").alias("id"), (F.col("id") * 2).alias("v")
+    )
+    t.create(df.repartition(4), cluster_by=["id"])
+    opened = []
+    open_input = LocalDataStore.open_input
+
+    def counting_open(self, rel):
+        opened.append(rel)
+        return open_input(self, rel)
+
+    monkeypatch.setattr(LocalDataStore, "open_input", counting_open)
+
+    def plan():
+        r = _SnapshotBatchReaderPushdown(t.path, {})
+        r.pushFilters([EqualTo(("id",), 7)])
+        return len(r.partitions())
+
+    n_first = plan()
+    assert any(rel.endswith(".bloom") for rel in opened), opened
+    opened.clear()
+    assert plan() == n_first
+    assert [rel for rel in opened if rel.endswith(".bloom")] == []
+
+
 def test_file_grouping_packs_by_spark_split_formula():
     """Partition planning groups files like Spark's scan split-packing:
     many tiny files amortize into multi-file tasks (never one task per

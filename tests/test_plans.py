@@ -1201,6 +1201,61 @@ def test_connected_components_bounded_graph_runs_one_job(spark):
     }
 
 
+def test_load_testdata_runs_no_job(spark):
+    """``load_testdata`` registers every sf0.001 view with its footer
+    schema, so it runs no schema-inference job, and each view keeps the
+    schema Spark infers (no ``_t``-style ts conversion)."""
+    from wopen_spark.tables import TESTDATA_TABLES, load_testdata
+
+    views, jobs = _jobs_in_group(
+        spark, "load-testdata", lambda: load_testdata(spark, SF_SMOKE)
+    )
+    assert jobs == []
+    assert sorted(views) == sorted(TESTDATA_TABLES)
+    for name, df in views.items():
+        inferred = spark.read.parquet(f"{SF_SMOKE}/{name}.parquet").schema
+        assert df.schema == inferred, name
+        assert spark.table(name).schema == inferred, name
+
+
+def test_bounded_dv_upsert_run_once_jobs(spark, tmp_path):
+    """A dv upsert batch within the driver row budget costs a fixed
+    handful of Spark jobs: the source fetch (the loader's dedup window
+    plus the bounded limit) and the classification fetch (plus the mask
+    broadcast once masks exist). The distributed path this replaces ran
+    10 and 12 (persist + bounds count, mask write, data-file persist,
+    count and write) and added 10 and 18 data files. Each commit now
+    adds one data file and one mask file."""
+    from pyspark.sql import types as T
+
+    from wopen_spark.snapshot_table import SnapshotTable
+    from wopen_spark.streaming.topic import FileTopic, UpsertTopicLoader
+
+    schema = T._parse_datatype_string("id long, ts long, amount double, name string")
+    table = SnapshotTable(spark, str(tmp_path / "t"))
+    table.create(
+        spark.createDataFrame([(i, 0, 1.0, "x") for i in range(200)], schema).coalesce(2)
+    )
+    topic = FileTopic(str(tmp_path / "topic"), partitions=1)
+    loader = UpsertTopicLoader(topic, table, "g", schema, key="id", order_col="ts")
+    counts = []
+    for it in (1, 2):
+        topic.produce(
+            0,
+            [
+                {"id": (i * 7 + it) % 300, "ts": it, "amount": float(i), "name": f"n{i}"}
+                for i in range(100)
+            ],
+        )
+        _, jobs = _jobs_in_group(spark, f"upsert-{it}", lambda: loader.run_once(spark))
+        counts.append(len(jobs))
+        commit = table._read_commit(table.latest_version())
+        assert len(commit["add"]) == 1
+        assert [len(e["paths"]) for e in commit["dv_add"]] == [1]
+    assert counts == [4, 5], counts
+    assert table.read().count() == len({r.id for r in table.read().collect()})
+
+
 def test_gate_small_sees_rewritten_files(spark, tmp_path, monkeypatch):
     """Overwriting the files under a path keeps the frame's semanticHash,
     so the gate must re-read the footers: 10 rows gate small, and the

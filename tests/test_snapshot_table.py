@@ -1059,6 +1059,20 @@ def test_generated_columns_compute_validate_update_drop(spark, table):
     assert got[7] is None
 
 
+def test_read_where_cross_type_probe_keeps_file(spark, table):
+    """A string probe on a long column: Spark's filter coerces it and
+    returns the row, so the stats (and the int bloom) must not be
+    compared with it — no TypeError, no skip."""
+    table.create(
+        spark.createDataFrame([(5, "a"), (6, "b")], "id long, s string").coalesce(1),
+        cluster_by=["id"],
+    )
+    df, rep = table.read_where({"id": ("5", "5")})
+    assert [r.s for r in df.collect()] == ["a"]
+    assert rep["files_read"] == 1
+    assert rep["files_skipped_by_stats"] == 0 and rep["files_skipped_by_bloom"] == 0
+
+
 def test_review_fixes_subset_schema_bloom_types_restore_guard(spark, table):
     """Round-8 review regressions pinned: (a) CHECK constraints and
     generation rules treat columns a legal subset-schema batch omits as

@@ -89,8 +89,6 @@ from wopen_spark.snapshot_table import (
     S3DataStore,
     SnapshotTable,
     VacuumedVersionError,
-    _bloom_test,
-    _json_safe,
     uri_to_path,
 )
 
@@ -417,47 +415,14 @@ class _SnapshotBatchReader(DataSourceReader):
                 pass  # un-orderable literal: no bound, no pruning
 
     def _skip(self, table: SnapshotTable, state: dict, meta: dict) -> bool:
-        mapping = state["column_mapping"]
-        prunable = table._prunable_cols(
-            state, list({*self._eq, *self._lo, *self._hi})
-        )
-        for col in prunable:
-            s = (meta.get("stats") or {}).get(table._phys(mapping, col))
+        ranges = {}
+        for col in {*self._eq, *self._lo, *self._hi}:
             point = self._eq.get(col)
-            lo = point if point is not None else self._lo.get(col)
-            hi = point if point is not None else self._hi.get(col)
-            if s is not None and s["min"] is not None:
-                # compare only within one type family — a cross-type
-                # comparison here would be a silent wrong skip
-                for bound, stat, op in ((lo, s["max"], "<"), (hi, s["min"], ">")):
-                    if bound is None:
-                        continue
-                    b = _json_safe(bound)
-                    same_family = (
-                        isinstance(b, bool) == isinstance(stat, bool)
-                        and (
-                            (isinstance(b, (int, float)) and isinstance(stat, (int, float)))
-                            or (isinstance(b, str) and isinstance(stat, str))
-                        )
-                    )
-                    if not same_family:
-                        continue
-                    if op == "<" and stat < b:
-                        return True
-                    if op == ">" and stat > b:
-                        return True
-            bl = meta.get("bloom")
-            if point is not None and bl is not None:
-                kind = bl.get("h")
-                probe_ok = (
-                    type(point) is int if kind == "i64" else isinstance(point, str)
-                )
-                if probe_ok and bl["col"] == table._phys(mapping, col):
-                    with table._data.open_input(bl["path"]) as bf:
-                        blob = bf.read()
-                    if not _bloom_test(blob, point, kind):
-                        return True
-        return False
+            ranges[col] = (
+                (point, point) if point is not None
+                else (self._lo.get(col), self._hi.get(col))
+            )
+        return table._refuted_by(state, meta, ranges) is not None
 
     def partitions(self):
         table = _resolve_table(self.path, self.options)

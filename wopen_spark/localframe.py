@@ -22,6 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# The engine's driver-side row budget: a frame known to hold at most this
+# many rows may be fetched to (or broadcast from) the driver and resolved
+# there. Bounded connected components (operators.graph), the
+# per-distinct broadcast gate (queries.registry) and bounded dv merges
+# (snapshot_table) all size their driver path by it.
+DRIVER_MAX_ROWS = 100_000
+
 
 def local_df(
     spark: SparkSession,

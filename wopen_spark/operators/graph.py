@@ -23,10 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Edge count up to which connected_components resolves on the driver:
-# the engine's driver-side row budget (queries.registry's
-# _PER_DISTINCT_BROADCAST_MAX_ROWS).
-_DRIVER_EDGES_MAX_ROWS = 100_000
+# Edge count up to which connected_components resolves on the driver.
+from wopen_spark.localframe import DRIVER_MAX_ROWS as _DRIVER_EDGES_MAX_ROWS
 
 
 def connected_components(

@@ -14,6 +14,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Broadcast the distinct side only below the engine's driver row budget:
+# ~100k rows of (key, few scalar columns) is well under any sane
+# driver/executor budget; above it the fingerprint-keyed shuffled join
+# is the safe plan.
+from wopen_spark.localframe import DRIVER_MAX_ROWS as _PER_DISTINCT_BROADCAST_MAX_ROWS
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -171,11 +177,6 @@ def _fingerprint(key_cols: list[str]):
         parts.append(F.col(c).cast("string"))
     return F.md5(parts[0] if len(parts) == 1 else F.concat(*parts))
 
-
-# Broadcast the distinct side only below this row count. ~100k rows of
-# (key, few scalar columns) is well under any sane driver/executor
-# budget; above it the fingerprint-keyed shuffled join is the safe plan.
-_PER_DISTINCT_BROADCAST_MAX_ROWS = 100_000
 
 # Logical operators that can only PRESERVE OR SHRINK row count. If a
 # gate frame's optimized plan contains nothing else above its parquet

@@ -71,7 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from wopen_spark.localframe import local_df
+from wopen_spark.localframe import DRIVER_MAX_ROWS, local_df
 
 CHECKPOINT_EVERY = 10
 
@@ -138,6 +138,17 @@ def _json_safe(v):
     if hasattr(v, "isoformat"):
         return v.isoformat()
     return v
+
+
+def _same_family(a, b) -> bool:
+    """Do two JSON-safe stat values order the way the column does: both
+    numbers, both strings, or both bools (bool is an int in Python, so
+    it is told apart first)? None belongs to no family."""
+    if isinstance(a, bool) or isinstance(b, bool):
+        return isinstance(a, bool) and isinstance(b, bool)
+    return (
+        isinstance(a, (int, float)) and isinstance(b, (int, float))
+    ) or (isinstance(a, str) and isinstance(b, str))
 
 
 _BLOOM_MAX_ROWS = 1_000_000  # past this, range stats dominate; no bloom
@@ -3052,7 +3063,10 @@ class SnapshotTable:
     ) -> tuple[list[dict], list[str], int]:
         """Write ``matches`` — a (_DV_FILE, _DV_ROW) frame of rows to
         mask — as deletion-vector parquet(s) in the data plane. Returns
-        (dv_add commit entries, masked data rels, rows masked).
+        (dv_add commit entries, masked data rels, rows masked). This is
+        the Spark-written mask of the distributed merge, delete and
+        update paths; a bounded dv ``merge_into`` writes its single mask
+        file from the driver instead (``_merge_into_driver``).
 
         ``dup_guard=True`` additionally enforces merge_into's
         multiple-match rule in the SAME job: the mask is pre-aggregated
@@ -3325,6 +3339,22 @@ class SnapshotTable:
         shape that survives 100 TB). CDF emits delete(old) + insert(new)
         either way.
 
+        Bounded dv merges run on the driver: a source of at most
+        ``DRIVER_MAX_ROWS`` rows (the engine's driver row budget) is
+        fetched once as Arrow, the candidate-target classification is
+        fetched once, and the commit lands at most one data file and one
+        mask file, written with pyarrow. Everything else takes the
+        distributed path (persisted source, Spark-written files): cow
+        mode, a larger source or classification, ``not_matched_by_source``
+        clauses, a conditional or explicit-value insert, a table with
+        generated or identity columns, CHECK constraints or column
+        mapping, a floating-point key, and any source or table column
+        whose type the Arrow round trip could change (timestamp,
+        decimal, binary, nested, collated string, or a date while the
+        session reads parquet dates in a legacy rebase mode). Both paths
+        give the same table, history and change feed; the choice and its
+        reason are logged at DEBUG on ``wopen_spark.snapshot_table``.
+
         Scale note: without ``not_matched_by_source`` clauses the target
         read is stats-pruned to the files whose [min,max] key ranges
         overlap the source keys; WITH them every live file must be
@@ -3413,13 +3443,31 @@ class SnapshotTable:
                 "engine-assigned; use explicit-column INSERT without them"
             )
 
+        conformed = self._conform(source, state["schema"])
+        why = self._driver_merge_blocker(
+            state, conformed.schema, keys, types, mode, not_matched, by_source
+        )
+        if why is None:
+            # one fetch both sizes and materializes the source
+            fetched = conformed.limit(DRIVER_MAX_ROWS + 1).toArrow()
+            if fetched.num_rows > DRIVER_MAX_ROWS:
+                why = f"source above {DRIVER_MAX_ROWS} rows"
+            else:
+                out = self._merge_into_driver(
+                    fetched, conformed.schema, state, keys, matched,
+                    not_matched, txn_app, txn_version, schema, types,
+                )
+                if out is not None:
+                    return out
+                why = f"classification above {DRIVER_MAX_ROWS} rows"
+        _log.debug("merge_into %s: distributed path (%s)", self.path, why)
         # persist the conformed source: it feeds the pruning-bounds
         # aggregate, the target-side classification join, and the insert
         # anti-join — three consumers that would otherwise EACH recompute
         # the full source lineage (for a streaming upsert batch that is a
         # scan + window dedup, re-run per consumer). A CDC/merge batch is
         # bounded by construction, so the cache is too.
-        src = self._conform(source, state["schema"]).alias("s").persist()
+        src = conformed.alias("s").persist()
         try:
             return self._merge_into_apply(
                 src, state, keys, matched, not_matched, by_source,
@@ -3427,6 +3475,282 @@ class SnapshotTable:
             )
         finally:
             src.unpersist()
+
+    # Spark types whose values survive Spark -> Arrow -> parquet -> Spark
+    # unchanged, so the driver merge path may write them with pyarrow.
+    # Timestamps (session-zone localization), decimals, binary, nested
+    # and collated strings stay on the Spark writer.
+    _DRIVER_MERGE_TYPES = frozenset(
+        ["tinyint", "smallint", "int", "bigint", "float", "double",
+         "string", "boolean", "date"]
+    )
+    _SRC_ROW = "__sn_src_row"
+
+    def _driver_merge_blocker(
+        self,
+        state: dict,
+        src_schema,
+        keys: list[str],
+        types: dict,
+        mode: str,
+        not_matched: list[dict],
+        by_source: list[dict],
+    ) -> str | None:
+        """Why a merge_into cannot take the driver path (None: it can).
+        The driver path reproduces exactly the plain dv shape: matched
+        update/delete clauses, at most an unconditional ``INSERT *``,
+        on a table with no rule that rewrites or checks rows and no
+        physical column names of its own (a ``cluster_by`` table is
+        fine: one file per batch is what its range write produces for a
+        bounded batch)."""
+        if mode != "dv":
+            return "cow mode"
+        if by_source:
+            return "not_matched_by_source clauses"
+        for what in ("generated", "identity", "constraints", "column_mapping"):
+            if state[what]:
+                return f"table has {what}"
+        first = not_matched[0] if not_matched else {}
+        if first.get("cond") is not None or first.get("values") is not None:
+            return "conditional or explicit-value insert"
+        src_cols = [(f.name, f.dataType) for f in src_schema.fields]
+        for name, dt in [*src_cols, *types.items()]:
+            if dt.simpleString() not in self._DRIVER_MERGE_TYPES:
+                return f"column {name} of type {dt.simpleString()}"
+            if isinstance(dt, T.DateType) and self.spark.conf.get(
+                "spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED"
+            ) != "CORRECTED":
+                # pyarrow writes proleptic dates with no rebase metadata;
+                # only CORRECTED reads them back as written
+                return f"date column {name} under a legacy rebase mode"
+        for k in keys:
+            if isinstance(types.get(k), (T.FloatType, T.DoubleType)):
+                return f"floating-point key {k}"
+        return None
+
+    def _merge_into_driver(
+        self,
+        fetched,
+        src_schema,
+        state: dict,
+        keys: list[str],
+        matched: list[dict],
+        not_matched: list[dict],
+        txn_app: str | None,
+        txn_version: int | None,
+        schema,
+        types: dict,
+    ) -> dict | None:
+        """The bounded dv merge: ``fetched`` is the whole conformed
+        source as an Arrow table (at most ``DRIVER_MAX_ROWS`` rows). Its
+        key bounds prune the target files; ONE more fetch then returns
+        every (source row, target file, target row, action, new image)
+        pair of the candidate files joined with the source, broadcast
+        from a JVM-side local relation built from ``fetched``.
+        The multiple-match guard runs on the driver before anything is
+        written; then the new rows (update images + inserts, the source
+        rows whose key matched nothing) land as one parquet file and the
+        mask as one parquet file, and one commit publishes both. Returns
+        None, having written nothing, when the classification holds more
+        than ``DRIVER_MAX_ROWS`` pairs."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        n_src = fetched.num_rows
+        bounds = {}
+        for k in keys:
+            mm = pc.min_max(fetched.column(k)).as_py() if n_src else {}
+            bounds[k] = (mm.get("min"), mm.get("max"))
+        cand, skipped = self._candidate_files(state, keys, bounds=bounds)
+        arrow_schema = pa.schema(
+            [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+        )
+        mask_schema = pa.schema([(_DV_FILE, pa.string()), (_DV_ROW, pa.int64())])
+        mask = mask_schema.empty_table()
+        parts, hit, n_pairs = [], set(), 0
+        if cand and n_src:
+            act_col, upd_sets, _ = self._clause_actions(keys, matched, [])
+            src_local = self.spark.createDataFrame(
+                fetched.append_column(
+                    self._SRC_ROW, pa.array(range(n_src), pa.int64())
+                ),
+                T.StructType(
+                    [*src_schema.fields, T.StructField(self._SRC_ROW, T.LongType())]
+                ),
+            ).alias("s")
+            tgt = self._read_snapshot(state, cand, keep_lineage=True).alias("t")
+            cls = (
+                tgt.join(
+                    F.broadcast(src_local),
+                    [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
+                    "inner",
+                )
+                .withColumn(self._MRG_ACT, act_col)
+                .select(
+                    F.col(f"s.{self._SRC_ROW}"),
+                    F.col(f"t.{_DV_FILE}"),
+                    F.col(f"t.{_DV_ROW}"),
+                    F.col(self._MRG_ACT),
+                    *self._image_cols(schema, types, upd_sets),
+                )
+                .limit(DRIVER_MAX_ROWS + 1)
+                .toArrow()
+            )
+            n_pairs = cls.num_rows
+            if n_pairs > DRIVER_MAX_ROWS:
+                return None
+            acts = cls.column(self._MRG_ACT).to_pylist()
+            claimed = [i for i, a in enumerate(acts) if a is not None]
+            mask = cls.select([_DV_FILE, _DV_ROW]).take(
+                pa.array(claimed, pa.int64())
+            ).cast(mask_schema)
+            pairs = zip(*(mask.column(c).to_pylist() for c in mask_schema.names))
+            if len(set(pairs)) < mask.num_rows:
+                # Delta semantics: a target row claimed by two source rows
+                raise ValueError(_DUP_MSG)
+            upd = cls.take(
+                pa.array([i for i in claimed if acts[i] in upd_sets], pa.int64())
+            )
+            parts.append(upd.select(schema.fieldNames()).cast(arrow_schema))
+            hit = set(cls.column(self._SRC_ROW).to_pylist())
+        if not_matched:
+            ins = fetched.take(
+                pa.array([i for i in range(n_src) if i not in hit], pa.int64())
+            )
+            parts.append(
+                pa.table(
+                    [
+                        ins.column(f.name).cast(f.type)
+                        if f.name in ins.column_names
+                        else pa.nulls(ins.num_rows, f.type)
+                        for f in arrow_schema
+                    ],
+                    schema=arrow_schema,
+                )
+            )
+        new_rows = pa.concat_tables(parts) if parts else arrow_schema.empty_table()
+        commit_dir = f"data/{uuid.uuid4().hex}"
+        adds, dv_add, masked_rels = [], [], []
+        if new_rows.num_rows:
+            # one file holds the whole batch, so it is as clustered as a
+            # range-partitioned write; the bloom goes on the leading
+            # cluster column, as _write_files puts it
+            cluster = state["cluster_by"] or [None]
+            adds = self._add_actions(
+                [self._put_parquet(commit_dir, new_rows)], cluster[0]
+            )
+        if mask.num_rows:
+            by_base = self._rels_by_basename(state)
+            masked_rels = sorted(
+                {by_base[b] for b in mask.column(_DV_FILE).to_pylist()}
+            )
+            order = [(_DV_FILE, "ascending"), (_DV_ROW, "ascending")]
+            dv_rel = self._put_parquet(commit_dir, mask.sort_by(order))
+            dv_add = [{"paths": [dv_rel], "for": masked_rels, "rows": mask.num_rows}]
+        _log.debug(
+            "merge_into %s: driver path (%d source rows, %d classified "
+            "pairs, %d claimed)", self.path, n_src, n_pairs, mask.num_rows,
+        )
+        report = {
+            "files_total": len(state["files"]),
+            "files_skipped_by_stats": len(skipped),
+            "files_probed": len(cand),
+            "files_rewritten": 0,
+        }
+        if not adds and not dv_add and txn_app is None:
+            return {
+                "version": state["version"], **report, "files_masked": 0, "noop": True,
+            }
+        self._try_commit(
+            state["version"] + 1,
+            {
+                "operation": "merge",
+                "add": adds,
+                "dv_add": dv_add,
+                "schema": state["schema"],
+                **({"txn_app": txn_app, "txn_version": txn_version} if txn_app else {}),
+            },
+        )
+        return {
+            "version": state["version"] + 1,
+            **report,
+            "files_masked": len(masked_rels),
+            "rows_claimed": mask.num_rows,
+        }
+
+    def _put_parquet(self, rel_dir: str, table) -> str:
+        """Write one Arrow table as one parquet file under ``rel_dir``
+        through the data plane, compressed with the session's parquet
+        codec; returns its log-relative path. The ``part-…-<uuid>``
+        basename is globally unique, as Spark's part files are: deletion
+        vectors key rows on ``_metadata.file_name``."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        codec = self.spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
+        codec = {"uncompressed": "none", "lz4raw": "lz4", "lz4_raw": "lz4"}.get(
+            codec, codec
+        )
+        if codec not in ("none", "snappy", "gzip", "brotli", "lz4", "zstd"):
+            codec = "snappy"
+        sink = pa.BufferOutputStream()
+        pq.write_table(table, sink, compression=codec)
+        rel = f"{rel_dir}/part-00000-{uuid.uuid4()}-c000.parquet"
+        self._data.put_bytes(rel, sink.getvalue().to_pybytes())
+        return rel
+
+    @classmethod
+    def _clause_actions(
+        cls, keys: list[str], matched: list[dict], by_source: list[dict]
+    ):
+        """The action a (t, s) pair of the classification join takes: one
+        first-match-wins CASE over the matched clauses (labels ``m<i>``)
+        and the not-matched-by-source clauses (``b<i>``), NULL when no
+        clause claims the pair. Returns (action column, {update label:
+        its ``set``}, delete labels)."""
+        # a left-joined source row is present iff its key columns came
+        # through non-null; key equality already excludes null keys, so
+        # any one key being non-null on the s side marks a match
+        is_matched = F.col(f"s.{keys[0]}").isNotNull()
+        chain = None
+        upd_sets: dict[str, dict[str, str]] = {}
+        del_labels: list[str] = []
+        for prefix, flag, clauses in (
+            ("m", is_matched, matched),
+            ("b", ~is_matched, by_source),
+        ):
+            for i, cl in enumerate(clauses):
+                label = f"{prefix}{i}"
+                cond = flag if cl.get("cond") is None else flag & F.expr(cl["cond"])
+                chain = (
+                    F.when(cond, F.lit(label))
+                    if chain is None
+                    else chain.when(cond, F.lit(label))
+                )
+                if cl["action"] == "update":
+                    upd_sets[label] = cl["set"]
+                else:
+                    del_labels.append(label)
+        act_col = chain.otherwise(F.lit(None)) if chain is not None else F.lit(None)
+        return act_col, upd_sets, del_labels
+
+    @classmethod
+    def _image_cols(cls, schema, types: dict, upd_sets: dict) -> list:
+        """New row image under first-match-wins clause semantics: every
+        set expression sees the OLD t row + its s row (one select —
+        assignments cannot leak into each other)."""
+        cols = []
+        for f in schema.fields:
+            col = F.col(f"t.{f.name}")
+            for label, assignments in upd_sets.items():
+                if f.name in assignments:
+                    col = F.when(
+                        F.col(cls._MRG_ACT) == label,
+                        F.expr(assignments[f.name]).cast(types[f.name]),
+                    ).otherwise(col)
+            cols.append(col.alias(f.name))
+        return cols
 
     def _merge_into_apply(
         self,
@@ -3485,31 +3809,9 @@ class SnapshotTable:
         joined = tgt.join(
             join_src, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys], "left"
         )
-        # a left-joined source row is present iff its key columns came
-        # through non-null; key equality already excludes null keys, so
-        # any one key being non-null on the s side marks a match
-        is_matched = F.col(f"s.{keys[0]}").isNotNull()
-        # build one first-match-wins CASE over both clause lists
-        chain = None
-        upd_sets: dict[str, dict[str, str]] = {}
-        del_labels: list[str] = []
-        for prefix, flag, clauses in (
-            ("m", is_matched, matched),
-            ("b", ~is_matched, by_source),
-        ):
-            for i, cl in enumerate(clauses):
-                label = f"{prefix}{i}"
-                cond = flag if cl.get("cond") is None else flag & F.expr(cl["cond"])
-                chain = (
-                    F.when(cond, F.lit(label))
-                    if chain is None
-                    else chain.when(cond, F.lit(label))
-                )
-                if cl["action"] == "update":
-                    upd_sets[label] = cl["set"]
-                else:
-                    del_labels.append(label)
-        act_col = chain.otherwise(F.lit(None)) if chain is not None else F.lit(None)
+        act_col, upd_sets, del_labels = self._clause_actions(
+            keys, matched, by_source
+        )
         joined = joined.withColumn(self._MRG_ACT, act_col)
 
         # Delta semantics for the multiple-match guard: error only when a
@@ -3522,20 +3824,9 @@ class SnapshotTable:
         # pass over the classification join, never a separate job.
 
         def _image(frame: DataFrame) -> DataFrame:
-            """New row image under first-match-wins clause semantics:
-            every set expression sees the OLD t row + its s row (one
-            select — assignments cannot leak into each other)."""
-            cols = []
-            for f in schema.fields:
-                col = F.col(f"t.{f.name}")
-                for label, assignments in upd_sets.items():
-                    if f.name in assignments:
-                        col = F.when(
-                            F.col(self._MRG_ACT) == label,
-                            F.expr(assignments[f.name]).cast(types[f.name]),
-                        ).otherwise(col)
-                cols.append(col.alias(f.name))
-            return frame.select(*cols, F.col(self._MRG_ACT))
+            return frame.select(
+                *self._image_cols(schema, types, upd_sets), F.col(self._MRG_ACT)
+            )
 
         # ---- inserts: source rows with no target match, FIRST insert
         # clause (conds see s.* only) claiming them. An ``INSERT *``
@@ -4001,58 +4292,14 @@ class SnapshotTable:
         Returns (DataFrame, report) — the report says what was skipped,
         because a silent cap looks like full coverage."""
         state = self._state(version)
-        prunable = self._prunable_cols(state, list(ranges))
-        mapping = state["column_mapping"]
         keep, skipped, bloom_skipped = [], 0, 0
         for rel, meta in state["files"].items():
-            ok = True
-            for c, (lo, hi) in ranges.items():
-                if c not in prunable:
-                    continue  # untrustworthy comparator -> must read
-                s = meta.get("stats", {}).get(self._phys(mapping, c))
-                if s is not None and s["min"] is not None:
-                    if hi is not None and s["min"] > _json_safe(hi):
-                        ok = False
-                        break
-                    if lo is not None and s["max"] < _json_safe(lo):
-                        ok = False
-                        break
-                # EQUALITY probe: the per-file bloom can skip where
-                # overlapping [min,max] ranges cannot (uniform keys,
-                # multi-append layouts). False-positive-only, so a kept
-                # file is just an unskipped read — never wrong results.
-                bl = meta.get("bloom")
-                kind = bl.get("h") if bl else None
-                # the probe's PYTHON type must match the bloom's hash
-                # domain exactly (int probe on an integer column, str on
-                # a string column) — any coercion (150 vs 150.0, "1" vs
-                # 1) would false-negative and silently drop rows
-                probe_ok = (
-                    type(lo) is int if kind == "i64" else isinstance(lo, str)
-                )
-                if (
-                    lo is not None
-                    and lo == hi
-                    and bl is not None
-                    and probe_ok
-                    and bl["col"] == self._phys(mapping, c)
-                ):
-                    blob = self._bloom_cache.get(bl["path"])
-                    if blob is None:
-                        # data files are immutable, so sidecars are too:
-                        # cache per handle, or a 10k-file table pays 10k
-                        # serial object reads per point query
-                        with self._data.open_input(bl["path"]) as bf:
-                            blob = bf.read()
-                        self._bloom_cache[bl["path"]] = blob
-                    if not _bloom_test(blob, lo, kind):
-                        ok = False
-                        bloom_skipped += 1
-                        break
-            if ok:
+            why = self._refuted_by(state, meta, ranges)
+            if why is None:
                 keep.append(rel)
             else:
                 skipped += 1
+                bloom_skipped += why == "bloom"
         df = self._read_snapshot(state, keep)
         for c, (lo, hi) in ranges.items():
             if lo is not None:
@@ -4065,6 +4312,54 @@ class SnapshotTable:
             "files_skipped_by_stats": skipped - bloom_skipped,
             "files_skipped_by_bloom": bloom_skipped,
         }
+
+    def _refuted_by(self, state: dict, meta: dict, ranges: dict) -> str | None:
+        """Why the file ``meta`` cannot hold a row inside every
+        ``ranges`` bound (column -> (lo, hi), either side None for open):
+        ``"stats"`` when its footer min/max excludes a bound, ``"bloom"``
+        when its bloom sidecar refutes a point probe (lo == hi), None
+        when it must be read. The one skip predicate of ``read_where``
+        and the ``wopen_snapshot`` pushdown reader, so both skip the
+        same files.
+
+        A bound is compared with a stat only within one type family
+        (number with number, string with string, bool with bool): Spark
+        coerces a cross-type probe like ``id = '5'`` and can match, so
+        such a file is kept. The bloom is probed only with a value of
+        its own hash domain (an ``int`` on an integer column, a ``str``
+        on a string one) for the same reason: a bloom must be
+        false-positive-only."""
+        mapping = state["column_mapping"]
+        for c in self._prunable_cols(state, list(ranges)):
+            lo, hi = ranges[c]
+            phys = self._phys(mapping, c)
+            s = (meta.get("stats") or {}).get(phys)
+            if s is not None and s["min"] is not None:
+                hi_j = None if hi is None else _json_safe(hi)
+                lo_j = None if lo is None else _json_safe(lo)
+                if (_same_family(hi_j, s["min"]) and s["min"] > hi_j) or (
+                    _same_family(lo_j, s["max"]) and s["max"] < lo_j
+                ):
+                    return "stats"
+            bl = meta.get("bloom")
+            if lo is None or lo != hi or bl is None or bl["col"] != phys:
+                continue
+            kind = bl.get("h")
+            probe_ok = type(lo) is int if kind == "i64" else isinstance(lo, str)
+            if probe_ok and not _bloom_test(self._bloom_blob(bl["path"]), lo, kind):
+                return "bloom"
+        return None
+
+    def _bloom_blob(self, rel: str) -> bytes:
+        """A bloom sidecar's bytes, read once per handle: data files are
+        immutable, so sidecars are too, and without the cache a
+        10k-file table pays 10k serial object reads per point query."""
+        blob = self._bloom_cache.get(rel)
+        if blob is None:
+            with self._data.open_input(rel) as bf:
+                blob = bf.read()
+            self._bloom_cache[rel] = blob
+        return blob
 
     def _version_asof(self, ts: float) -> int:
         best = None

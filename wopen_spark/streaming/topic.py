@@ -312,7 +312,13 @@ class UpsertTopicLoader:
     record, but per-key ordering across partitions is the producer's
     responsibility, exactly as in Kafka. ``mode="dv"`` (default) makes
     each batch cost O(changed rows) with zero file rewrites — the shape
-    that holds at 100 TB; compaction later folds the masks."""
+    that holds at 100 TB; compaction later folds the masks. A batch
+    within the engine's driver row budget (``DRIVER_MAX_ROWS``) takes
+    merge_into's bounded dv path: one source fetch, one classification
+    fetch, and a commit of at most one data file and one mask file; larger
+    batches, and tables that need the distributed path (constraints,
+    generated or identity columns, column mapping, types without an
+    exact Arrow round trip), run it unchanged."""
 
     def __init__(
         self,

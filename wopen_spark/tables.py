@@ -293,13 +293,20 @@ def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register the driver's parquet tables as temp views and return them.
 
     Parquet scans keep column pruning + predicate pushdown (verify with
-    ``df.explain``: PushedFilters / ReadSchema).
+    ``df.explain``: PushedFilters / ReadSchema). A single-file table is
+    read with the schema of its footer (``registry._footer_schema``), so
+    registering the views runs no schema-inference job; each view keeps
+    the schema Spark infers (no ``_t``-style ``ts`` conversion).
     """
+    from wopen_spark.queries.registry import _footer_schema
+
     out: dict[str, DataFrame] = {}
     for name in TESTDATA_TABLES:
         p = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(p):
-            df = spark.read.parquet(p)
+            schema = _footer_schema(spark, p)
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            df = reader.parquet(p)
             df.createOrReplaceTempView(name)
             out[name] = df
     return out
