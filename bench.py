@@ -89,9 +89,7 @@ def main() -> None:
         # per-query persists) stay pinned until Python GC releases the
         # proxy objects, and CPython's lazy collection let ~100 queries
         # of sf10 checkpoint blocks accumulate until the ContextCleaner
-        # itself OOM'd the 8g heap mid-suite (r7). Intentional suite
-        # caches (the persisted LSH/trade-pair frames) hold live refs and
-        # are unaffected. Cost: ~ms per query.
+        # itself OOM'd the 8g heap mid-suite (r7). Cost: ~ms per query.
         del df
         gc.collect()
 

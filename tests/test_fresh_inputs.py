@@ -1,5 +1,6 @@
-"""Every query call reads its own inputs: no process-global memo may serve
-a result for data rewritten under the same path in the same process.
+"""Every query call reads its own inputs: no process-global memo and no
+Spark cache entry may serve a result for data rewritten under the same
+path in the same process.
 
 Each rewrite test runs a query on a tmp copy of the smoke corpus,
 rewrites one input file in place, reruns, and checks the new answer.
@@ -42,31 +43,86 @@ def test_brand_guard_sees_rewritten_part(spark, sf_copy):
         QUERIES["brand_cooccurrence"](spark, sf_copy)
 
 
-def test_near_dup_components_sees_rewritten_documents(spark, sf_copy):
-    """Connected components over a rewritten corpus returns the labels
-    of the new documents, equal to the DuckDB oracle on the new file."""
+def _cut_documents(sf_dir):
+    path = os.path.join(sf_dir, "documents.parquet")
+    pq.write_table(pq.read_table(path).slice(0, 250), path)
+
+
+def _reverse_part_brands(sf_dir):
+    """Same 25 brands (under the <=64 guard), reassigned to other parts."""
+    path = os.path.join(sf_dir, "part.parquet")
+    part = pq.read_table(path)
+    i = part.schema.get_field_index("p_brand")
+    brands = pa.array(part.column(i).to_pylist()[::-1])
+    pq.write_table(part.set_column(i, "p_brand", brands), path)
+
+
+def _halve_lineitem(sf_dir):
+    path = os.path.join(sf_dir, "lineitem.parquet")
+    li = pq.read_table(path)
+    pq.write_table(li.slice(0, li.num_rows // 2), path)
+
+
+_REWRITES = [
+    ("near_dup_components", _cut_documents),
+    ("brand_cooccurrence", _reverse_part_brands),
+    ("new_trade_edges_per_week", _halve_lineitem),
+    ("pagerank_customer_supplier", _halve_lineitem),
+]
+
+
+def _oracle_rows(sf_dir, name):
     import duckdb
 
-    from wopen_spark.queries import ORACLES, QUERIES
+    from tests.test_queries_oracle import _normalize
+    from wopen_spark.queries import ORACLES
+    from wopen_spark.tables import TESTDATA_TABLES
 
-    def labels():
-        return sorted(
-            map(tuple, QUERIES["near_dup_components"](spark, sf_copy).collect())
-        )
-
-    before = labels()
-    path = os.path.join(sf_copy, "documents.parquet")
-    pq.write_table(pq.read_table(path).slice(0, 250), path)
-    # The LSH candidate pairs stay persisted in Spark's CacheManager,
-    # which matches plans by path; refreshByPath is Spark's hook for a
-    # file rewritten outside Spark and drops those entries.
-    spark.catalog.refreshByPath(path)
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
-    oracle = con.execute(ORACLES["near_dup_components"]).fetchall()
-    expected = sorted(map(tuple, oracle))
-    assert len(expected) != len(before)
-    assert labels() == expected
+    for t in TESTDATA_TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return _normalize(con.execute(ORACLES[name]).df())
+
+
+def _spark_rows(spark, sf_dir, name):
+    from tests.test_queries_oracle import _normalize
+    from wopen_spark.queries import QUERIES
+
+    return _normalize(QUERIES[name](spark, sf_dir).toPandas())
+
+
+@pytest.mark.parametrize("name,rewrite", _REWRITES, ids=[n for n, _ in _REWRITES])
+def test_query_sees_rewritten_input(spark, sf_copy, name, rewrite):
+    """A query run before and after one of its input files is rewritten
+    outside Spark (pyarrow) returns the DuckDB oracle's answer on the new
+    file: nothing from the first call may serve the second."""
+    before = _spark_rows(spark, sf_copy, name)
+    rewrite(sf_copy)
+    expected = _oracle_rows(sf_copy, name)
+    assert expected != before
+    assert _spark_rows(spark, sf_copy, name) == expected
+
+
+@pytest.mark.parametrize(
+    "name,driver_edges_max",
+    [(n, None) for n, _ in _REWRITES] + [("near_dup_components", 0)],
+    ids=[n for n, _ in _REWRITES] + ["near_dup_components-loop"],
+)
+def test_no_cache_entry_outlives_query(spark, monkeypatch, name, driver_edges_max):
+    """Spark's CacheManager matches cached plans by path, so an entry
+    left behind by one query would serve the next query's read of the
+    same files, rewritten or not. A zero driver bound forces
+    connected_components onto its distributed loop path."""
+    from wopen_spark.operators import graph
+    from wopen_spark.queries import QUERIES
+
+    if driver_edges_max is not None:
+        monkeypatch.setattr(graph, "_DRIVER_EDGES_MAX_ROWS", driver_edges_max)
+    spark.catalog.clearCache()
+    assert QUERIES[name](spark, SF_SMOKE).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_event_stream_sees_source_relaid_as_table_dir(spark, sf_copy, tmp_path):
@@ -124,6 +180,31 @@ def test_only_handle_pools_are_module_caches():
         "datasource.py:_STORE_CACHE",
         "datasource.py:_DRIVER_TABLE_CACHE",
     }
+
+
+def _persisting_functions_without_unpersist() -> set[str]:
+    """``module:function`` of every function in wopen_spark/ that calls
+    ``.persist(`` or ``.cache(`` but never ``.unpersist(``."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "wopen_spark"
+    found = set()
+    for src in root.rglob("*.py"):
+        for fn in ast.walk(ast.parse(src.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            called = {
+                node.func.attr
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            }
+            if called & {"persist", "cache"} and "unpersist" not in called:
+                found.add(f"{src.relative_to(root)}:{fn.name}")
+    return found
+
+
+def test_every_persist_is_released_in_its_function():
+    """A persisted frame is released by the function that persisted it,
+    so no cache entry outlives the call that made it."""
+    assert _persisting_functions_without_unpersist() == set()
 
 
 def test_pooled_table_handle_sees_other_handles_commit(spark, tmp_path):

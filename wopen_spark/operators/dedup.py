@@ -117,7 +117,6 @@ def minhash_lsh_candidates(
     n_hashes: int = 8,
     n_bands: int = 4,
     shingle_size: int = 3,
-    cache: str | None = "disk_only",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding.
 
@@ -128,7 +127,10 @@ def minhash_lsh_candidates(
     self-join would run the signature subtree once per join side whenever
     AQE plans the join as a broadcast, which defeats exchange reuse. A
     bucket's ids are collected on one task, so the pairs only ever come
-    from colliding buckets, never the O(n²) pair space.
+    from colliding buckets, never the O(n²) pair space. Nothing is
+    persisted: each call plans the pairs from its own read of ``df``,
+    and a caller that scans them more than once releases what it
+    persists.
     """
     if n_hashes % n_bands:
         raise ValueError(
@@ -163,36 +165,7 @@ def minhash_lsh_candidates(
             ),
         )
     )
-    pairs = buckets.select(F.inline(in_bucket)).distinct()
-    # CACHED by default (the connected_components edge-cache pattern):
-    # six registered queries + the SQL front-door views derive this
-    # exact candidate-pair plan, and the CacheManager serves them all
-    # from ONE entry via canonical-plan matching — repeated calls share
-    # the entry, they don't accumulate. The pair set is near-dup-sized
-    # on a deduplicated corpus, but on a pathologically duplicated one
-    # it is fact-proportional, so the level is a PARAMETER: any
-    # ``StorageLevel`` attribute name (case-insensitive), defaulting to
-    # ``disk_only`` — the banked sf10 lesson is that fact-proportional
-    # suite-shared caches on the heap smear every later query via GC —
-    # or ``None`` to opt out entirely (single-consumer callers).
-    # NOTE: Spark's CacheManager keys on the canonical plan, so when two
-    # consumers pass different levels the FIRST persist wins and the
-    # second is a no-op — the parameter only takes effect for the first
-    # consumer of a given plan in a session.
-    if cache is not None:
-        from pyspark import StorageLevel
-
-        level = getattr(StorageLevel, cache.upper(), None)
-        if not isinstance(level, StorageLevel):
-            valid = sorted(
-                n for n, v in vars(StorageLevel).items()
-                if isinstance(v, StorageLevel)
-            )
-            raise ValueError(
-                f"unknown storage level {cache!r}; valid names: {valid}"
-            )
-        pairs = pairs.persist(level)
-    return pairs
+    return buckets.select(F.inline(in_bucket)).distinct()
 
 
 def simhash(text: Column, bits: int = 16) -> Column:

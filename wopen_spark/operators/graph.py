@@ -189,26 +189,19 @@ def _min_label_components(
         # an exhausted loop is NOT a converged answer: a component whose
         # diameter exceeds max_iterations would be silently reported as
         # several clusters, indistinguishable from a correct result
+        sym.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             f"iterations; raise max_iterations (diameter exceeds it)"
         )
     # Eagerly checkpoint the final labels (|nodes|-sized, one cheap job)
-    # so the result survives independent of the loop lineage, then leave
-    # sym CACHED on purpose (this path only: the driver path caches
-    # nothing). Unpersisting here was measured 2x slower
-    # across the CC query family: five registered queries build the SAME
-    # candidate graph, and Spark's CacheManager serves them all from one
-    # cache entry via canonical-plan matching — an entry repeated calls
-    # SHARE, not accumulate (caching an already-cached plan is a no-op),
-    # so there is no storage leak to clean up: the graph's cache
-    # footprint is bounded by the number of DISTINCT edge inputs, and a
-    # near-dup candidate graph is pairs-sized (KBs) by design. pagerank
-    # below differs on both counts (single caller, |fact|-sized edges)
-    # and does unpersist its invariants.
-    return labels.select(
+    # so the result survives independent of the loop lineage, then
+    # release the cached edge list, as pagerank and bfs_hops do.
+    out = labels.select(
         F.col("node"), F.col("label").alias("component")
     ).localCheckpoint()
+    sym.unpersist()
+    return out
 
 
 def pagerank(
@@ -466,11 +459,9 @@ def dbscan_from_pairs(
         # callers taking this path own releasing sym themselves.
         return out
     # materialize the labels (|clustered points|-sized, one job) and
-    # release the cached neighborhood — unlike connected_components'
-    # shared candidate graph, this symmetrized pair set is derived from
-    # the caller's eps-neighborhood input and has a single consumer, so
-    # leaving it cached would leak storage per invocation (bfs_hops /
-    # pagerank make the same single-caller release)
+    # release the cached neighborhood — leaving it cached would leak
+    # storage per invocation (connected_components, bfs_hops and
+    # pagerank make the same release)
     out = out.localCheckpoint()
     sym.unpersist()
     return out

@@ -1202,14 +1202,6 @@ def _order_brand_masks(spark: SparkSession, sf_dir: str):
         .agg(F.bit_or("bm").alias("mask"))
         .groupBy("mask")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # persisted like the LSH pair / trade-pair caches: BOTH
-        # co-occurrence queries derive this exact histogram, and the
-        # CacheManager's canonical-plan matching serves them from one
-        # entry — the fact-sized bit_or shuffle runs once per suite, not
-        # once per consumer. The histogram is (mask, cnt) pairs bounded
-        # by distinct brand SETS (<< orders on clone-heavy corpora), so
-        # the storage is trivial next to the pipeline it saves.
-        .persist()
     )
     return masks, dim
 

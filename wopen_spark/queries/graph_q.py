@@ -70,18 +70,14 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trade_pair_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The contracted (customer, supplier) trade-pair frame shared by
-    the graph family — ``pagerank_customer_supplier`` (needs the pair
-    set), ``new_trade_edges_per_week`` (needs min order date per pair),
+    """The contracted (customer, supplier) trade-pair frame of the graph
+    family: ``pagerank_customer_supplier`` (needs the pair set),
+    ``new_trade_edges_per_week`` (needs min order date per pair),
     ``bfs_trade_route_hops`` (needs summed revenue cents per pair).
 
-    r5 verdict #5: each of the three queries re-derived the orders x
-    lineitem join (the suite's biggest repeated fact pipeline at sf10).
-    This helper pays the fact join + ONE (ck, sk) aggregate once and
-    persists the |distinct pairs| result; Spark's CacheManager matches
-    the canonical plan across all three consumers (the exact mechanism
-    the LSH candidate-pair cache uses in operators/dedup.py), so
-    repeated calls share one cache entry instead of accumulating.
+    One fact join + ONE (ck, sk) aggregate; each consumer builds it from
+    its own read of the inputs and scans it exactly once, so nothing is
+    persisted and no result outlives its query.
 
     Shape: shuffle_hash on the smaller orders side (sort-merge would
     sort both facts on a key the pair aggregate immediately re-hashes);
@@ -89,17 +85,7 @@ def _trade_pair_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     extras each consumer ignores cost state, not an extra pass. Exact
     scaled-long cents (a float sum could flip a BFS edge between
     engines); min over dates commutes with week truncation downstream.
-
-    Storage level is DISK_ONLY, deliberately: the pair frame is
-    |distinct (ck, sk)| — fact-proportional at sf10 (~GBs deserialized)
-    — and a MEMORY_AND_DISK cache of that size steals unified memory
-    from every other query in the process (measured: a broad +2-5 s
-    smear across the sf10 suite). Each consumer scans it exactly once,
-    so columnar-compressed disk reads cost ~nothing next to the fact
-    join they replace, and the heap stays dedicated to execution.
     """
-    from pyspark.storagelevel import StorageLevel
-
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", F.to_date("o_orderdate").alias("o_odate")
     )
@@ -118,7 +104,6 @@ def _trade_pair_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_odate").alias("first_date"),
             F.sum("cents").alias("cents"),
         )
-        .persist(StorageLevel.DISK_ONLY)
     )
 
 
@@ -181,8 +166,8 @@ def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer~supplier trade graph derived from orders x lineitem.
     Centrality scoring of the entity graph — the standard iterative
     test beyond connected components. The edge set comes from the
-    suite-shared persisted pair summary (``_trade_pair_summary`` — one
-    fact join for the whole graph family); each round is then
+    contracted pair summary (``_trade_pair_summary`` — one fact join
+    and one pair aggregate); each round is then
     |edges|-shaped, exactly the distributed PageRank loop (see
     operators/graph.pagerank for the determinism contract)."""
     pairs = _trade_pair_summary(spark, sf_dir)
@@ -190,7 +175,7 @@ def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = F.col("sk") * 2 + 1
     # Map-side explode emits BOTH edge directions from ONE pass over the
     # contracted pair frame — a union of `directed` with its reversal
-    # would scan the cached pairs twice for nothing.
+    # would compute the pairs twice for nothing.
     edges = pairs.select(
         F.explode(
             F.array(
@@ -275,11 +260,11 @@ def near_dup_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def new_trade_edges_per_week(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the shared pair summary carries min(o_odate) per (ck, sk);
+    # the pair summary carries min(o_odate) per (ck, sk);
     # date_trunc('week') is monotone non-decreasing, so trunc(min(d)) =
     # min(trunc(d)) — applying it on the contracted frame runs it once
     # per PAIR, not once per 60M join rows. The only work beyond the
-    # cached frame is one pair-sized week aggregate.
+    # pair summary is one pair-sized week aggregate.
     pairs = _trade_pair_summary(spark, sf_dir)
     return (
         pairs.groupBy(
@@ -337,8 +322,8 @@ def bfs_trade_route_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     (components = label convergence, pagerank = fixed point, BFS =
     frontier expansion), oracle-checked against a recursive CTE.
 
-    Scale: revenue per (customer, supplier) comes from the suite-shared
-    persisted pair summary (one fact join for the whole graph family);
+    Scale: revenue per (customer, supplier) comes from the contracted
+    pair summary (one fact join and one pair aggregate);
     the nation rollup is then pair-sized work — broadcast dims onto the
     contracted frame, one tiny aggregate. Exact scaled-long revenue
     (cents — a threshold on a float sum could flip an edge between

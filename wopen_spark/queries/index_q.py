@@ -442,7 +442,7 @@ def entity_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per transitive cluster (near_dup_keep_corpus), keep the HIGHEST
 # QUALITY member — the policy real training-data dedup ships (drop the
 # truncated/boilerplate copy, keep the clean one). Same LSH -> CC
-# machinery (shared plan caches); quality computes once per DISTINCT
+# machinery; quality computes once per DISTINCT
 # text; the only new shuffle is the per-component argmax window, whose
 # partitions are cluster-sized, never corpus-sized.
 # ---------------------------------------------------------------------------
