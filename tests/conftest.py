@@ -19,6 +19,21 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def upsert(table, df, key, mode="cow"):
+    """Plain keyed upsert through ``SnapshotTable.merge_into``: a matched
+    target row takes every source column, an unmatched source row is
+    inserted."""
+    return table.merge_into(
+        df,
+        key,
+        matched=[
+            {"action": "update", "cond": None, "set": {c: f"s.{c}" for c in df.columns}}
+        ],
+        not_matched=[{"action": "insert", "cond": None}],
+        mode=mode,
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from wopen_spark.session import get_spark

@@ -14,6 +14,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import upsert
 from wopen_spark.snapshot_table import SnapshotTable, VacuumedVersionError
 
 
@@ -75,12 +76,12 @@ def test_dv_masked_rows_do_not_resurrect_through_merge(spark, tmp_path):
     # upsert a key in the SAME file as the masked row: the file is
     # rewritten and the masked row must not come back
     up = spark.createDataFrame([(1, 111)], "id long, v long")
-    t.merge(up, "id")
+    upsert(t, up, "id")
     got = dict(_rows(t.read()))
     assert 2 not in got and got[1] == 111
     # a merge touching only masked rows' keys must not resurrect either
     up2 = spark.createDataFrame([(2, 222)], "id long, v long")
-    t.merge(up2, "id")
+    upsert(t, up2, "id")
     assert dict(_rows(t.read()))[2] == 222  # re-inserted BY the merge
 
 
@@ -165,9 +166,9 @@ def test_dv_merge_masks_and_appends_without_rewrites(spark, tmp_path):
     t = _make(spark, tmp_path)
     before = _data_files(t)
     up = spark.createDataFrame([(1, 111), (42, 4242)], "id long, v long")
-    report = t.merge(up, "id", mode="dv")
+    report = upsert(t, up, "id", mode="dv")
     assert report["files_rewritten"] == 0
-    assert report["rows_masked"] == 1  # only id=1 existed
+    assert report["rows_claimed"] == 1  # only id=1 existed
     after = _data_files(t)
     assert all(after[k] == v for k, v in before.items()), "dv merge rewrote a file"
     got = dict(_rows(t.read()))
@@ -178,7 +179,7 @@ def test_dv_merge_masks_and_appends_without_rewrites(spark, tmp_path):
 def test_dv_merge_cdf_emits_delete_old_insert_new(spark, tmp_path):
     t = _make(spark, tmp_path)
     v = t.latest_version()
-    t.merge(spark.createDataFrame([(3, 333)], "id long, v long"), "id", mode="dv")
+    upsert(t, spark.createDataFrame([(3, 333)], "id long, v long"), "id", mode="dv")
     changes = _rows(t.read_changes(v).select("id", "v", "_change_type"))
     assert (3, 6, "delete") in changes and (3, 333, "insert") in changes
 
@@ -212,7 +213,7 @@ def test_update_unknown_column_and_bad_mode_raise(spark, tmp_path):
     with pytest.raises(ValueError, match="mode"):
         t.update_where("id = 1", {"v": "1"}, mode="zap")
     with pytest.raises(ValueError, match="mode"):
-        t.merge(spark.range(1).selectExpr("id", "id as v"), "id", mode="zap")
+        upsert(t, spark.range(1).selectExpr("id", "id as v"), "id", mode="zap")
 
 
 def test_dv_update_then_compact_then_vacuum_roundtrip(spark, tmp_path):

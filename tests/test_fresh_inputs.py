@@ -207,6 +207,48 @@ def test_every_persist_is_released_in_its_function():
     assert _persisting_functions_without_unpersist() == set()
 
 
+def _unreferenced_private_functions() -> set[str]:
+    """``module:name`` of every ``_``-prefixed (non-dunder) function or
+    method defined in wopen_spark/ whose name nothing in the program,
+    its tests or its tools refers to: no name, attribute, import or
+    exact string (``getattr`` / ``monkeypatch.setattr``) use."""
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    root = repo / "wopen_spark"
+    sources = [
+        *root.rglob("*.py"),
+        *(repo / "tests").rglob("*.py"),
+        *(repo / "tools").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    defined, used = set(), set()
+    for src in sources:
+        for node in ast.walk(ast.parse(src.read_text())):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.update(filter(None, (node.name.rsplit(".", 1)[-1], node.asname)))
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                used.add(node.value)
+            elif (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and src.is_relative_to(root)
+                and node.name.startswith("_")
+                and not node.name.endswith("__")
+            ):
+                defined.add((node.name, f"{src.relative_to(root)}:{node.name}"))
+    return {where for name, where in defined if name not in used}
+
+
+def test_every_private_function_is_referenced():
+    """A private helper nothing calls is dead code: delete it rather
+    than keep it in step with the code around it."""
+    assert _unreferenced_private_functions() == set()
+
+
 def test_pooled_table_handle_sees_other_handles_commit(spark, tmp_path):
     """The pooled driver handle replays the log on every read, so a
     commit made through a separate SnapshotTable handle is visible in

@@ -55,8 +55,6 @@ def test_identity_declare_refusals(spark, tmp_path):
         t3.set_identity_column("id")
     with pytest.raises(NotImplementedError):
         t3.overwrite(spark.createDataFrame([], "id long, name string"))
-    with pytest.raises(NotImplementedError):
-        t3.merge(spark.createDataFrame([("z",)], "name string"), key="name")
 
 
 def test_identity_survives_checkpoint_and_travel(spark, tmp_path):

@@ -505,152 +505,6 @@ def test_prefix_containment_complete_beyond_neighbors(spark):
     assert got == {1: True, 2: False, 3: False, 4: False, 5: True, 6: False, 7: False}
 
 
-def test_table_merge_upsert_and_compact(spark, tmp_path):
-    """MERGE: new keys insert, matching keys replace, others survive;
-    compact() collapses the file count without changing rows."""
-    from wopen_spark.tables import Table
-
-    t = Table(spark, "crm", "merge_t", warehouse=str(tmp_path))
-    t.write(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["id", "v"]))
-    t.merge(spark.createDataFrame([(2, "B2"), (4, "d")], ["id", "v"]), key="id")
-    got = {r.id: r.v for r in t.read().collect()}
-    assert got == {1: "a", 2: "B2", 3: "c", 4: "d"}
-    # merge again to fan out files, then compact to one
-    t.merge(spark.createDataFrame([(5, "e")], ["id", "v"]), key="id")
-    before = t.compact(target_files=1)
-    assert before >= 1
-    after = sum(
-        1
-        for _, _, files in __import__("os").walk(t.path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    assert after == 1
-    got2 = {r.id: r.v for r in t.read().collect()}
-    assert got2 == {1: "a", 2: "B2", 3: "c", 4: "d", 5: "e"}
-
-
-def test_table_merge_into_empty_table(spark, tmp_path):
-    from wopen_spark.tables import Table
-
-    t = Table(spark, "crm", "merge_fresh", warehouse=str(tmp_path))
-    t.merge(spark.createDataFrame([(1, "x")], ["id", "v"]), key="id")
-    assert [r.v for r in t.read().collect()] == ["x"]
-
-
-def _partition_file_state(part_dir):
-    """(relpath -> (size, sha256)) of every parquet file under part_dir."""
-    import hashlib
-    import os
-
-    state = {}
-    for root, _, files in os.walk(part_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                with open(p, "rb") as fh:
-                    digest = hashlib.sha256(fh.read()).hexdigest()
-                state[os.path.relpath(p, part_dir)] = (os.path.getsize(p), digest)
-    return state
-
-
-def _make_partitioned_table(spark, tmp_path, name):
-    import json
-
-    from wopen_spark.tables import Table
-
-    schema_path = str(tmp_path / f"{name}_schema.json")
-    with open(schema_path, "w") as f:
-        json.dump(
-            [{"name": "id", "type": "INTEGER"}, {"name": "v", "type": "STRING"}], f
-        )
-    t = Table(spark, "crm", name, warehouse=str(tmp_path))
-    t.create_partitioned(schema_path, "dt")
-    for day, rows in [
-        ("2024-01-01", [(1, "a"), (2, "b")]),
-        ("2024-01-02", [(3, "c")]),
-        ("2024-01-03", [(4, "d"), (5, "e")]),
-    ]:
-        t.write_partition(day, "dt", spark.createDataFrame(rows, ["id", "v"]))
-    return t
-
-
-def test_merge_partition_touches_only_target_partition(spark, tmp_path):
-    """VERDICT r4 #2: upsert into 1 of 3 partitions; the other 2 partitions'
-    parquet files must be byte-identical afterwards (never read/rewritten),
-    and the partition listing must be unchanged."""
-    import os
-
-    t = _make_partitioned_table(spark, tmp_path, "mp_t")
-    before_p2 = _partition_file_state(os.path.join(t.path, "dt=2024-01-02"))
-    before_p3 = _partition_file_state(os.path.join(t.path, "dt=2024-01-03"))
-    assert before_p2 and before_p3
-
-    t.merge_partition(
-        "2024-01-01",
-        "dt",
-        spark.createDataFrame([(2, "B2"), (6, "f")], ["id", "v"]),
-        key="id",
-    )
-    got = {
-        r.id: r.v
-        for r in t.read().filter("dt = date'2024-01-01'").collect()
-    }
-    assert got == {1: "a", 2: "B2", 6: "f"}
-    assert _partition_file_state(os.path.join(t.path, "dt=2024-01-02")) == before_p2
-    assert _partition_file_state(os.path.join(t.path, "dt=2024-01-03")) == before_p3
-    assert t.partitions("dt") == ["2024-01-01", "2024-01-02", "2024-01-03"]
-    # untouched partitions still read back intact
-    assert t.read().count() == 6
-
-
-def test_merge_partition_new_partition_and_audit_abort(spark, tmp_path):
-    """merge_partition into a missing partition creates it; a source with
-    duplicate keys fails the write-audit-publish audit and leaves the live
-    partition untouched."""
-    import os
-
-    import pytest
-
-    t = _make_partitioned_table(spark, tmp_path, "mp_audit")
-    t.merge_partition(
-        "2024-01-04", "dt", spark.createDataFrame([(9, "z")], ["id", "v"]), key="id"
-    )
-    assert "2024-01-04" in t.partitions("dt")
-
-    live_before = _partition_file_state(os.path.join(t.path, "dt=2024-01-01"))
-    dup = spark.createDataFrame([(7, "x"), (7, "y")], ["id", "v"])
-    with pytest.raises(ValueError, match="merge audit"):
-        t.merge_partition("2024-01-01", "dt", dup, key="id")
-    assert _partition_file_state(os.path.join(t.path, "dt=2024-01-01")) == live_before
-    assert not os.path.exists(os.path.join(t.path, "dt=2024-01-01.staging"))
-
-
-def test_merge_and_compact_preserve_partition_layout(spark, tmp_path):
-    """ADVICE r4: whole-table merge/compact on a partitioned table must keep
-    the hive layout (field=value dirs), the schema sidecar, and the
-    partitions() listing — not silently flatten the table."""
-    import os
-
-    t = _make_partitioned_table(spark, tmp_path, "mp_layout")
-    t.merge(
-        spark.createDataFrame(
-            [(3, "C3", "2024-01-02")], ["id", "v", "dt"]
-        ).selectExpr("id", "v", "cast(dt as date) dt"),
-        key="id",
-    )
-    assert t.partitions("dt") == ["2024-01-01", "2024-01-02", "2024-01-03"]
-    assert os.path.exists(os.path.join(t.path, "_wopen_schema.json"))
-    got = {r.id: r.v for r in t.read().collect()}
-    assert got == {1: "a", 2: "b", 3: "C3", 4: "d", 5: "e"}
-
-    t.compact(target_files=1)
-    assert t.partitions("dt") == ["2024-01-01", "2024-01-02", "2024-01-03"]
-    assert {r.id: r.v for r in t.read().collect()} == got
-    # spark can still read it (no mixed flat+hive layout)
-    assert t.read().count() == 5
-
-
 def test_bucketed_ranking_matches_global_window(spark):
     """bucketed_row_number / bucketed_ntile must equal the
     single-partition Window answers row-for-row, including tie-breaks
@@ -708,39 +562,6 @@ def test_bucketed_ranking_matches_global_window(spark):
         .collect()
     }
     assert got_g == want_g
-
-
-def test_concurrent_merges_serialize_and_both_land(spark, tmp_path):
-    """Concurrent-writer story: two threads upserting the same table at
-    once must serialize on the table lock — both upserts land, no staged
-    swap clobbers the other's commit."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from wopen_spark.tables import Table
-
-    t = Table(spark, "crm", "conc_t", warehouse=str(tmp_path))
-    t.write(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]))
-
-    def upsert(rows):
-        t.merge(spark.createDataFrame(rows, ["id", "v"]), key="id")
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(upsert, [(3, "c"), (1, "A1")])
-        f2 = pool.submit(upsert, [(4, "d"), (2, "B2")])
-        f1.result(timeout=120)
-        f2.result(timeout=120)
-    got = {r.id: r.v for r in t.read().collect()}
-    assert got == {1: "A1", 2: "B2", 3: "c", 4: "d"}
-    import os
-
-    # the fcntl lockfile PERSISTS by design (unlink-on-release would
-    # reintroduce the reclaim race: a waiter could lock an fd whose path
-    # was already unlinked); the kernel record lock is what's released
-    assert os.path.exists(t.path + ".lock")
-    from wopen_spark.tables import _TableLock
-
-    with _TableLock(t.path + ".lock", timeout_s=5.0):
-        pass  # immediately acquirable: nothing holds it
 
 
 def test_per_distinct_null_key_matches_raw_key_join(spark):
@@ -1063,78 +884,6 @@ def test_bfs_hops_dedupes_seed_frontier(spark):
     start = spark.createDataFrame([("a",), ("a",)], "node string")
     rows = bfs_hops(edges, start, max_hops=2).collect()
     assert sorted((r["node"], r["hops"]) for r in rows) == [("a", 0), ("b", 1)]
-
-
-def test_table_lock_mutual_exclusion_and_crash_release(tmp_path):
-    """tables._TableLock is a kernel fcntl lock: N waiters serialize (at
-    most one holder ever), a pre-existing junk lockfile is harmless (no
-    mtime staleness protocol to confuse), and a holder that DIES releases
-    instantly — the kernel drops the record lock with the process, so no
-    reclaim race can delete a freshly acquired lock."""
-    import os
-    import subprocess
-    import sys
-    import threading
-    import time as _time
-
-    from wopen_spark.tables import _TableLock
-
-    lock_path = str(tmp_path / "t.lock")
-    with open(lock_path, "w") as f:  # a crashed writer's leftover content
-        f.write("dead")
-    os.utime(lock_path, (_time.time() - 3600, _time.time() - 3600))
-
-    holders = []
-    max_holders = []
-    mu = threading.Lock()
-    errors = []
-
-    def worker():
-        try:
-            with _TableLock(lock_path, timeout_s=30.0):
-                with mu:
-                    holders.append(1)
-                    max_holders.append(len(holders))
-                _time.sleep(0.01)
-                with mu:
-                    holders.pop()
-        except Exception as e:  # noqa: BLE001
-            errors.append(e)
-
-    threads = [threading.Thread(target=worker) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors, errors
-    assert len(max_holders) == 8  # every waiter eventually acquired
-    assert max(max_holders) == 1  # never two holders at once
-
-    # crash release: a child process takes the lock and dies holding it;
-    # the kernel frees it, so the parent acquires immediately (no 10-min
-    # staleness window, no reclamation protocol)
-    child = subprocess.Popen(
-        [
-            sys.executable,
-            "-c",
-            (
-                "import fcntl, os, sys; "
-                f"fd = os.open({lock_path!r}, os.O_CREAT | os.O_RDWR); "
-                "fcntl.lockf(fd, fcntl.LOCK_EX); "
-                "print('locked', flush=True); "
-                "import time; time.sleep(30)"
-            ),
-        ],
-        stdout=subprocess.PIPE,
-        text=True,
-    )
-    assert child.stdout.readline().strip() == "locked"
-    child.kill()
-    child.wait()
-    t0 = _time.monotonic()
-    with _TableLock(lock_path, timeout_s=10.0):
-        pass
-    assert _time.monotonic() - t0 < 5.0  # released by the kernel, not a timeout
 
 
 def test_brand_mask_rejects_over_64_brands(spark, tmp_path):

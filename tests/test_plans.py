@@ -1412,13 +1412,27 @@ def test_zipf_and_diversity_no_cartesian(spark):
         assert "CartesianProduct" not in join_strategies(df), name
 
 
+def _sql_executions(spark) -> dict[int, str]:
+    """Execution id -> physical plan description of every SQL execution
+    in the SQL status store (it keeps each execution's final plan and
+    works with the UI disabled)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[e.executionId()] = e.physicalPlanDescription()
+    return out
+
+
 def test_dbscan_candidate_stage_never_cartesian(spark):
     """LSH-DBSCAN's neighborhood stage must stay banded equi-joins —
     a regression to all-pairs would show up as a cartesian/BNLJ here
     and as an O(n^2) blowup at corpus scale. The operator materializes
-    its result (releasing its cached neighborhood), so the registered
-    query's final plan is an RDD scan — pin the candidate-pair stage
-    and the operator's lazy plan directly instead."""
+    its result, so the registered query's final plan is an RDD scan —
+    pin the candidate-pair stage's lazy plan and every physical plan
+    the operator executes instead. The operator also releases its
+    cached neighborhood before it returns."""
     from wopen_spark.operators.graph import dbscan_from_pairs
     from wopen_spark.queries.similarity import _dbscan_eps_pairs
 
@@ -1426,10 +1440,15 @@ def test_dbscan_candidate_stage_never_cartesian(spark):
     plan = plan_string(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    lazy = dbscan_from_pairs(pairs, min_pts=3, materialize=False)
-    plan = plan_string(lazy)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    last_id = max(_sql_executions(spark), default=-1)
+    dbscan_from_pairs(pairs, min_pts=3)
+    plans = [p for i, p in _sql_executions(spark).items() if i > last_id]
+    # the neighborhood joins themselves ran: the pin sees real plans
+    assert any("Join" in p for p in plans), plans
+    for p in plans:
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_sql_merge_parses_to_the_same_clause_structure(spark):

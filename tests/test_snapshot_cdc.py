@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import upsert
 from wopen_spark.snapshot_table import SnapshotTable, VacuumedVersionError
 
 
@@ -40,7 +41,7 @@ def test_changes_append_only(spark, table):
 def test_changes_merge_shows_delete_plus_insert(spark, table):
     table.create(_mk(spark, [(1, "a"), (2, "b")]))
     v0 = table.latest_version()
-    table.merge(_mk(spark, [(2, "B!")]), "id")
+    upsert(table, _mk(spark, [(2, "B!")]), "id")
     ch = table.read_changes(v0).collect()
     got = sorted((r["id"], r["v"], r["_change_type"]) for r in ch)
     # the rewritten file's old rows are deletes; its new contents inserts
@@ -162,7 +163,8 @@ def test_cdf_drives_incremental_aggregate(spark, table):
 
     # upstream churn: upsert id 2 (a: 20 -> 25), insert id 4 (b: +5),
     # delete id 3 (b: -30), and a compact (must contribute NOTHING)
-    table.merge(
+    upsert(
+        table,
         spark.createDataFrame([(2, "a", 25), (4, "b", 5)], "id long, grp string, val long"),
         "id",
     )

@@ -14,6 +14,7 @@ import random
 
 import pytest
 
+from tests.conftest import upsert
 from wopen_spark.snapshot_table import (
     BlobDataStore,
     HadoopFsDataStore,
@@ -143,7 +144,8 @@ def test_snapshot_random_op_sequence_matches_model(
             ]
             for k, s, x in rows:
                 model[k] = (s, x)
-            table.merge(
+            upsert(
+                table,
                 spark.createDataFrame(
                     rows, f"id long, {val_col} string, x {'long' if widened else 'int'}"
                 ),

@@ -17,6 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import upsert
 from wopen_spark.snapshot_table import (
     CHECKPOINT_EVERY,
     CommitConflictError,
@@ -88,7 +89,7 @@ def test_merge_rewrites_only_touched_files(spark, table):
     up = spark.createDataFrame(
         [(i, "NEW") for i in range(100, 105)], "id long, v string"
     )
-    report = table.merge(up, "id")
+    report = upsert(table, up, "id")
     assert report["files_rewritten"] == 1
     # stats pruned the files whose id range can't contain 100..104
     assert report["files_skipped_by_stats"] == 2
@@ -107,7 +108,8 @@ def test_merge_inserts_new_keys(spark, table):
     table.create(
         spark.createDataFrame([(1, "a")], "id long, v string").coalesce(1)
     )
-    table.merge(
+    upsert(
+        table,
         spark.createDataFrame([(1, "A"), (7, "g")], "id long, v string"), "id"
     )
     assert _rows(table.read()) == [(1, "A"), (7, "g")]
@@ -251,7 +253,8 @@ def test_vacuum_and_merge_on_blob_data_store(spark, tmp_path):
     t.create(
         spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string").coalesce(1)
     )
-    rep = t.merge(
+    rep = upsert(
+        t,
         spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string"), "id"
     )
     assert rep["files_rewritten"] == 1
@@ -559,7 +562,8 @@ def test_rename_column_metadata_only(spark, table):
 
     # merge through the logical name: stats pruning keys on the PHYSICAL
     # name under the hood, so the untouched file must still be skipped
-    report = table.merge(
+    report = upsert(
+        table,
         spark.createDataFrame([(100, "NEW")], "id long, label string"), "id"
     )
     assert report["files_skipped_by_stats"] == 1
@@ -653,7 +657,7 @@ def test_drop_column_metadata_only_and_no_resurrection(spark, table):
     assert rows == {1: None, 2: "new"}
 
     # merges still work on the surviving cluster column
-    table.merge(spark.createDataFrame([(1, "upd", 11)], "id long, v string, x long"), "id")
+    upsert(table, spark.createDataFrame([(1, "upd", 11)], "id long, v string, x long"), "id")
     rows = {r["id"]: (r["v"], r["x"]) for r in table.read().collect()}
     assert rows == {1: ("upd", 11), 2: ("new", 20)}
 
@@ -853,7 +857,7 @@ def test_check_constraints_enforced_on_every_write_path(spark, table):
     # merge: incoming violating row rejected (both modes)
     for mode in ("cow", "dv"):
         with pytest.raises(ConstraintViolationError):
-            table.merge(mk([(-5, "m")]), key="id", mode=mode)
+            upsert(table, mk([(-5, "m")]), key="id", mode=mode)
     # update: assignment producing a violating image rejected (both modes)
     for mode in ("cow", "dv"):
         with pytest.raises(ConstraintViolationError):
@@ -1043,7 +1047,7 @@ def test_generated_columns_compute_validate_update_drop(spark, table):
         table.update_where("id = 3", {"v_len": "9"})  # direct assignment
 
     # merge computes it for incoming rows too
-    table.merge(mk([(2, "zzzzz"), (6, "ff")]), key="id", mode="cow")
+    upsert(table, mk([(2, "zzzzz"), (6, "ff")]), key="id", mode="cow")
     got = {r["id"]: r["v_len"] for r in table.read().collect()}
     assert got[2] == 5 and got[6] == 2
 
@@ -1110,7 +1114,7 @@ def test_review_fixes_subset_schema_bloom_types_restore_guard(spark, table):
     table.restore(v_before_add)  # now legal
 
     # (d) cow merge rewrite computes v_up for survivor rows in touched files
-    table.merge(mk([(1, "zz", 0.0)], "id long, v string, score double"), key="id")
+    upsert(table, mk([(1, "zz", 0.0)], "id long, v string, score double"), key="id")
     got = {r["id"]: r["v_up"] for r in table.read().collect()}
     assert got[1] == "ZZ"
 

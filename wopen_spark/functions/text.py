@@ -28,11 +28,6 @@ STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def _word_count(col: Column, word: str) -> Column:
-    """Occurrences of ``word`` as a whole word."""
-    return F.regexp_count(col, F.lit(rf"\b{word}\b"))
-
-
 def _marker_hits(col: Column, words: list[str]) -> Column:
     """All whole-word occurrences of any marker, in ONE regex pass.
 
@@ -84,11 +79,6 @@ def language_id(col: Column) -> Column:
 def token_count(col: Column) -> Column:
     """Token count under the BPE-ish regex tokenizer."""
     return F.regexp_count(col, F.lit(TOKEN_REGEX))
-
-
-def whitespace_token_count(col: Column) -> Column:
-    """Plain whitespace token count."""
-    return F.size(F.split(F.trim(col), r"\s+"))
 
 
 def quality_score(col: Column) -> Column:

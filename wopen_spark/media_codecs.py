@@ -164,31 +164,6 @@ def decode_image(data: bytes) -> np.ndarray:
     )
 
 
-def encode_image(pixels: np.ndarray, fmt: str = "png") -> bytes:
-    fmt_l = fmt.lower()
-    if fmt_l == "png":
-        return png_encode(pixels)
-    if fmt_l in ("jpeg", "jpg"):
-        try:
-            from PIL import Image  # noqa: PLC0415
-
-            buf = io.BytesIO()
-            Image.fromarray(pixels).save(buf, format="JPEG")
-            return buf.getvalue()
-        except ImportError:
-            from wopen_spark.jpeg_codec import jpeg_encode  # noqa: PLC0415
-
-            return jpeg_encode(pixels)
-    try:
-        from PIL import Image  # noqa: PLC0415
-
-        buf = io.BytesIO()
-        Image.fromarray(pixels).save(buf, format=fmt.upper())
-        return buf.getvalue()
-    except ImportError as e:
-        raise NotImplementedError(f"encoding {fmt} needs PIL") from e
-
-
 def mean_luma(pixels: np.ndarray) -> float:
     """Rec.601 luma in [0,1]; alpha channels are ignored."""
     px = pixels.astype(np.float64)

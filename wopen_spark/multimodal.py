@@ -27,7 +27,6 @@ is present.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -73,18 +72,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame", T.BinaryType()),
     ]
 )
-
-
-def _fake_decode(content: bytes) -> tuple[int, int, float, str]:
-    """Deterministic synthetic decode: dimensions/luma/phash derived from
-    the md5 of the bytes — stable across engines, workers, and runs.
-    ``mean_luma`` is k/65535.0 unrounded: the same IEEE double comes out of
-    any engine, so oracle hashes match bit-for-bit."""
-    h = hashlib.md5(content or b"").hexdigest()
-    width = 64 + int(h[:4], 16) % 1984
-    height = 64 + int(h[4:8], 16) % 1984
-    mean_luma = int(h[8:12], 16) / 65535.0
-    return width, height, mean_luma, h[:16]
 
 
 def image_features(

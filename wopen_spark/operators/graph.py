@@ -386,7 +386,6 @@ def dbscan_from_pairs(
     min_pts: int,
     src: str = "id_a",
     dst: str = "id_b",
-    materialize: bool = True,
 ) -> DataFrame:
     """DBSCAN given a materialized eps-neighborhood pair list: returns
     ``(node, cluster, role)`` where role is ``core`` or ``border`` and
@@ -452,12 +451,6 @@ def dbscan_from_pairs(
     out = core_lab.withColumn("role", F.lit("core")).unionByName(
         border.withColumn("role", F.lit("border"))
     )
-    if not materialize:
-        # plan-inspection escape hatch: the lazy plan keeps the full
-        # candidate-join lineage visible to explain(). connected_components
-        # has already read the core subgraph, which fills sym's cache, so
-        # callers taking this path own releasing sym themselves.
-        return out
     # materialize the labels (|clustered points|-sized, one job) and
     # release the cached neighborhood — leaving it cached would leak
     # storage per invocation (connected_components, bfs_hops and

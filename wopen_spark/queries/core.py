@@ -396,14 +396,6 @@ def top_supplier_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Text analysis over documents (training-data ops). Pure Column
 # expressions; at 100 TB these run in codegen with zero Python.
 # ---------------------------------------------------------------------------
-def _sql_word_count(expr: str, word: str) -> str:
-    return f"len(regexp_extract_all({expr}, '\\b{word}\\b'))"
-
-
-def _sql_marker_sum(lang: str) -> str:
-    return " + ".join(_sql_word_count("text", w) for w in LANG_MARKERS[lang])
-
-
 @query(
     "doc_token_stats",
     # NB: DuckDB standard strings treat backslash literally, so \S reaches

@@ -303,7 +303,7 @@ def training_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-deduping the whole corpus. One anti join keyed on the md5
 # fingerprint: the ledger side is read-only (at scale, a bucketed
 # fingerprint table so the join is shuffle-free on re-ingest), the new
-# batch is partition-sized. Composes with Table.merge_partition for the
+# batch is partition-sized. Composes with Table.write_partition for the
 # end-to-end idempotent ingest.
 # ---------------------------------------------------------------------------
 @query(

@@ -159,12 +159,6 @@ def _lsum(col, scale: int = 2):
     return F.sum(F.round(col * factor).cast("long")).cast("double") / float(factor)
 
 
-def _davg(col, scale: int = 4):
-    """Deterministic double average: decimal sum / count, cast double —
-    identical in Spark and DuckDB regardless of row order."""
-    return (F.sum(col.cast(f"decimal(28,{scale})")) / F.count(F.lit(1))).cast("double")
-
-
 def _fingerprint(key_cols: list[str]):
     """md5 fingerprint of the key tuple — a fixed 32-char join key in
     place of (possibly multi-KB) raw values. ``concat`` (not concat_ws)

@@ -1984,9 +1984,10 @@ def dbscan_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dbscan_eps_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The eps-neighborhood pair list feeding dbscan_embedding_clusters,
-    exposed so plan tests can pin the candidate stage's lazy plan (the
-    operator materializes its result, which hides this lineage from the
-    registered query's explain output)."""
+    exposed so plan tests can pin the candidate stage's lazy plan and
+    the plans the operator executes over it (the operator materializes
+    its result, which hides this lineage from the registered query's
+    explain output)."""
     base = (
         _t(spark, sf_dir, "embeddings")
         .groupBy("embedding")

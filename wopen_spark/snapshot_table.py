@@ -18,11 +18,11 @@ Delta Lake / Iceberg build it (public designs), sized for 100 TB:
   commits can't change what it sees. ``read(version=N)`` /
   ``read(asof_ts=...)`` replay history.
 - **Optimistic concurrency.** ``append`` retries on conflict (appends
-  commute); ``overwrite``/``merge``/``delete_where`` raise
+  commute); ``overwrite``/``merge_into``/``delete_where`` raise
   ``CommitConflictError`` — the caller decides, nothing is clobbered.
 - **File-level column stats → copy-on-write at file granularity.**
   Each added file records min/max/null-count per column from parquet
-  FOOTERS (pyarrow metadata — no data read). ``merge``/``delete_where``
+  FOOTERS (pyarrow metadata — no data read). ``merge_into``/``delete_where``
   use key-range stats to skip files that cannot contain affected keys,
   then an ``input_file_name()`` probe to rewrite ONLY files that
   actually do: every other file is untouched bytes. O(affected files),
@@ -103,9 +103,9 @@ class ConstraintViolationError(RuntimeError):
 def uri_to_path(uri: str) -> str:
     """Normalize a *local* Spark ``input_file_name()`` URI (``file:/…``,
     ``file:///…``) or a bare path to a plain filesystem path for
-    relpath arithmetic. THE single copy of this parsing — both local
-    data stores and the registry's footer-bound probe route through it,
-    so a future scheme fix lands everywhere at once.
+    relpath arithmetic. THE single copy of this parsing — the
+    datasource's local store spec and the registry's footer-bound probe
+    route through it, so a future scheme fix lands everywhere at once.
 
     Non-file schemes (``s3a://bucket/key``, ``gs://…``) are REJECTED:
     ``urlparse().path`` would drop the netloc (bucket), so two buckets'
@@ -682,8 +682,7 @@ class DataStore:
     - ``open_input(rel)``: seekable binary handle for parquet FOOTER
       reads (pyarrow) — an object store serves this with ranged GETs.
     - ``scan_uris(rels)``: URIs for ``spark.read.parquet`` over
-      committed files; ``uri_to_rel`` inverts ``input_file_name()``
-      URIs back to log-relative paths for the merge/delete probes.
+      committed files.
     - ``size`` / ``exists`` / ``delete`` / ``mtime`` /
       ``list_data_files`` / ``list_data_dirs`` / ``cleanup_dir``: the
       vacuum + manifest surface. ``mtime`` raises ``FileNotFoundError``
@@ -707,9 +706,6 @@ class DataStore:
         raise NotImplementedError
 
     def scan_uris(self, rels: list[str]) -> list[str]:
-        raise NotImplementedError
-
-    def uri_to_rel(self, uri: str) -> str:
         raise NotImplementedError
 
     def exists(self, rel: str) -> bool:
@@ -774,9 +770,6 @@ class LocalDataStore(DataStore):
 
     def scan_uris(self, rels: list[str]) -> list[str]:
         return [self._p(r) for r in rels]
-
-    def uri_to_rel(self, uri: str) -> str:
-        return os.path.relpath(uri_to_path(uri), self.root)
 
     def exists(self, rel: str) -> bool:
         return os.path.exists(self._p(rel))
@@ -893,9 +886,6 @@ class BlobDataStore(DataStore):
                 os.replace(tmp, local)  # cache-internal, not table protocol
             out.append(local)
         return out
-
-    def uri_to_rel(self, uri: str) -> str:
-        return os.path.relpath(uri_to_path(uri), self._cache)
 
     def exists(self, rel: str) -> bool:
         with self._mu:
@@ -1048,9 +1038,6 @@ class S3DataStore(DataStore):
             out.append(local)
         return out
 
-    def uri_to_rel(self, uri: str) -> str:
-        return os.path.relpath(uri_to_path(uri), self._cache)
-
     def exists(self, rel: str) -> bool:
         try:
             self.size(rel)
@@ -1191,7 +1178,7 @@ class HadoopFsDataStore(DataStore):
     - Spark writes each commit attempt into a FRESH ``data/<uuid>``
       directory (never renamed, never mutated), so the store needs no
       rename atomicity — matching the LogStore design.
-    - ``uri_to_rel`` does its own scheme-aware relativization
+    - Listing does its own scheme-aware relativization
       (``relativize``); it must NOT use ``uri_to_path``, which rejects
       remote schemes precisely because dropping the netloc would
       collide buckets.
@@ -1286,9 +1273,6 @@ class HadoopFsDataStore(DataStore):
 
     def scan_uris(self, rels: list[str]) -> list[str]:
         return [f"{self.root}/{r}" for r in rels]
-
-    def uri_to_rel(self, uri: str) -> str:
-        return self.relativize(uri)
 
     def exists(self, rel: str) -> bool:
         return bool(self._fs.exists(self._jp(rel)))
@@ -1589,7 +1573,6 @@ class SnapshotTable:
         cluster_by: list[str] | None,
         mapping: dict | None = None,
         adaptive: bool = False,
-        precounted: int | None = None,
     ) -> list[dict]:
         """Write immutable data files for one commit into a fresh subdir;
         return their add-action metadata. Clustering narrows per-file key
@@ -1609,13 +1592,13 @@ class SnapshotTable:
         engine-internal (the engine owns merge output layout, as Delta
         does), so callers cannot pin merge file counts.
 
-        ``precounted``: the caller already persisted ``df`` and knows its
-        row count — skip the internal persist/count pass and leave cache
-        lifetime to the caller. Unclustered writes have no count probe
-        at all (the write is their single pass, and an engine-internal
-        batch arrives AQE-coalesced from its producing exchange), so a
-        0-row unclustered batch still runs one small write job whose
-        0-row part files _add_action discards."""
+        A clustered write persists ``df`` for the length of the write and
+        counts it once, which also skips the write of a 0-row batch.
+        Unclustered writes have no count probe at all (the write is their
+        single pass, and an engine-internal batch arrives AQE-coalesced
+        from its producing exchange), so a 0-row unclustered batch still
+        runs one small write job whose 0-row part files _add_action
+        discards."""
         if _DV_FILE in df.columns or _DV_ROW in df.columns:
             raise ValueError(
                 f"{_DV_FILE}/{_DV_ROW} are reserved for deletion-vector "
@@ -1626,36 +1609,28 @@ class SnapshotTable:
         cluster_cols = [c for c in (cluster_by or []) if c in df.columns]
         cached = None
         if cluster_cols:
-            if precounted is None:
-                # The clustered path re-reads the incoming frame (range
-                # sampler + write, and the partition probe on the pinned
-                # path). Persist once so the count fills the cache and
-                # the sampler + writer read it back — the incoming batch
-                # is computed exactly once however expensive its lineage
-                # (guide §2.4: one pass, not three). Engine-internal
-                # rewrites go to DISK_ONLY: a cow UPDATE's survivor set
-                # approaches table size, and a deserialized heap cache
-                # of that would churn executor memory before spilling
-                # (guide §5); caller-shaped batches keep the default
-                # level. The cache is scoped to this write and released
-                # in the finally below.
-                from pyspark.storagelevel import StorageLevel
+            # The clustered path re-reads the incoming frame (range
+            # sampler + write, and the partition probe on the pinned
+            # path). Persist once so the count fills the cache and the
+            # sampler + writer read it back — the incoming batch is
+            # computed exactly once however expensive its lineage
+            # (guide §2.4: one pass, not three). Engine-internal rewrites
+            # go to DISK_ONLY: a cow UPDATE's survivor set approaches
+            # table size, and a deserialized heap cache of that would
+            # churn executor memory before spilling (guide §5);
+            # caller-shaped batches keep the default level. The cache is
+            # scoped to this write and released in the finally below.
+            from pyspark.storagelevel import StorageLevel
 
-                df = cached = df.persist(
-                    StorageLevel.DISK_ONLY
-                    if adaptive
-                    else StorageLevel.MEMORY_AND_DISK
-                )
-                n_rows = cached.count()  # fills the cache
-            else:
-                n_rows = precounted
-            if n_rows == 0:
+            df = cached = df.persist(
+                StorageLevel.DISK_ONLY if adaptive else StorageLevel.MEMORY_AND_DISK
+            )
+            if cached.count() == 0:  # fills the cache
                 # nothing to write: a 0-row batch produces only 0-row
                 # part files, every one of which _add_action deletes —
                 # skip the write job (and its range exchange) outright.
                 # Empty creates / no-op merge legs hit this constantly.
-                if cached is not None:
-                    cached.unpersist()
+                cached.unpersist()
                 return []
             if adaptive:
                 # Always through the coalescible range exchange, no
@@ -2926,10 +2901,6 @@ class SnapshotTable:
             (candidates if overlap else skipped).append(rel)
         return candidates, skipped
 
-    def _rel_path(self, file_uri: str) -> str:
-        """input_file_name() URI -> log-relative data file path."""
-        return self._data.uri_to_rel(file_uri)
-
     def _read_files(
         self,
         rels: list[str],
@@ -3133,170 +3104,6 @@ class SnapshotTable:
         masked_rels = sorted(by_base[b] for b in obs.get["files"])
         return [{"paths": dv_rels, "for": masked_rels, "rows": n_rows}], masked_rels, n_rows
 
-    def merge(self, df: DataFrame, key: str | list[str], mode: str = "cow") -> dict:
-        """Keyed upsert at file granularity: stats-skip files outside the
-        incoming key range, probe the rest for ACTUAL key hits.
-
-        ``mode="cow"``: rewrite only hit files (minus matched rows, plus
-        all incoming rows); every non-hit file survives as untouched
-        bytes.
-
-        ``mode="dv"`` (low-shuffle merge): MASK the matched rows with a
-        deletion vector and append the incoming rows as new files —
-        nothing already on disk is rewritten, so the write cost is
-        O(incoming + mask), not O(hit files). The Delta low-shuffle-merge
-        shape; compaction later materializes the masks. CDF emits the
-        matched rows as deletes and the incoming rows as inserts either
-        way.
-
-        Returns a report of what the pruning did — silent caps are how
-        scale bugs hide."""
-        if mode not in ("cow", "dv"):
-            raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
-        keys = [key] if isinstance(key, str) else list(key)
-        state = self._state()
-        if state["identity"]:
-            raise NotImplementedError(
-                "merge on a table with identity columns is not supported "
-                "yet; append/INSERT/COPY INTO assign them"
-            )
-        df = self._apply_generated(df, state)
-        self._enforce(df, state["constraints"], state["schema"])
-        schema, mapping = self._merged_schema(state, df)
-        eff_mapping = mapping if mapping is not None else state["column_mapping"]
-        from pyspark.sql import Observation
-
-        # ONE pass over the incoming batch serves every driver-side need
-        # (guide §2.4): the batch is persisted, and the cache-fill count
-        # carries the per-key min/max pruning bounds as an Observation —
-        # so neither _candidate_files' bounds aggregate nor _write_files'
-        # emptiness count runs as its own job, and the key probe /
-        # anti-join / new-file write all read the cache instead of
-        # recomputing the batch lineage (for a CDC upsert batch that
-        # lineage is a scan + window dedup — at 100 TB each avoided
-        # recompute is a full source pass).
-        new_rows = self._conform(df, schema).persist()
-        try:
-            obs = Observation()
-            aggs = []
-            for i, k in enumerate(keys):
-                aggs += [F.min(k).alias(f"mn_{i}"), F.max(k).alias(f"mx_{i}")]
-            n_new = new_rows.observe(obs, *aggs).count()
-            got = obs.get
-            bounds = {k: (got[f"mn_{i}"], got[f"mx_{i}"]) for i, k in enumerate(keys)}
-            return self._merge_apply(
-                new_rows, n_new, bounds, state, keys, mode, schema,
-                mapping, eff_mapping,
-            )
-        finally:
-            new_rows.unpersist()
-
-    def _merge_apply(
-        self,
-        new_rows: DataFrame,
-        n_new: int,
-        bounds: dict,
-        state: dict,
-        keys: list[str],
-        mode: str,
-        schema: dict,
-        mapping: dict | None,
-        eff_mapping: dict | None,
-    ) -> dict:
-        """merge body, split out so the caller can scope the source cache
-        with try/finally around the whole pipeline."""
-        key_df = new_rows.select(*keys).distinct()
-        candidates, skipped = self._candidate_files(state, keys, bounds=bounds)
-        if mode == "dv":
-            dv_add, masked_rels, n_rows = [], [], 0
-            if candidates:
-                matches = self._read_snapshot(
-                    state, candidates, keep_lineage=True
-                ).join(key_df, keys, "left_semi")
-                dv_add, masked_rels, n_rows = self._write_dv(state, matches)
-            adds = self._write_files(
-                new_rows, state["cluster_by"], eff_mapping, adaptive=True,
-                precounted=n_new,
-            )
-            self._try_commit(
-                state["version"] + 1,
-                {
-                    "operation": "merge",
-                    "schema": schema,
-                    "add": adds,
-                    "dv_add": dv_add,
-                    **({"column_mapping": mapping} if mapping is not None else {}),
-                },
-            )
-            return {
-                "version": state["version"] + 1,
-                "files_total": len(state["files"]),
-                "files_skipped_by_stats": len(skipped),
-                "files_probed": len(candidates),
-                "files_rewritten": 0,
-                "files_masked": len(masked_rels),
-                "rows_masked": n_rows,
-            }
-        touched: list[str] = []
-        if candidates:
-            by_base = self._rels_by_basename(state)
-            probe = (
-                # DV-applied probe: a row already masked by a deletion
-                # vector must neither count its file as touched nor
-                # resurrect through the rewrite
-                self._read_snapshot(state, candidates, keep_lineage=True)
-                # no forced broadcast: a bulk upsert's key set is
-                # upsert-sized, not small by contract — AQE broadcasts
-                # when it actually fits, else this is a shuffled semi
-                .join(key_df, keys, "left_semi")
-                .select(_DV_FILE)
-                .distinct()
-            )
-            touched = sorted(by_base[r[_DV_FILE]] for r in probe.collect())
-        adds: list[dict] = []
-        if touched:
-            # survivors read (and conform) through the MERGED schema so a
-            # widening upsert unions cleanly with the incoming rows; the
-            # snapshot read applies the files' deletion vectors, so the
-            # rewrite drops masked rows for good (their DVs retire with
-            # the removed files)
-            kept = self._conform(
-                self._read_snapshot(state, touched), schema
-            ).join(
-                key_df, keys, "left_anti"  # AQE-sized, same reason as the probe
-            )
-            # survivor rows are being physically rewritten anyway, so
-            # recompute their generated columns too - same contract as
-            # update_where's cow path (pre-rule NULLs fill on rewrite)
-            merged = self._regen(kept, state).unionByName(
-                new_rows, allowMissingColumns=True
-            )
-        else:
-            merged = new_rows
-        adds = self._write_files(
-            merged, state["cluster_by"], eff_mapping, adaptive=True,
-            # no touched files -> the write input IS the cached batch,
-            # already counted by the bounds job
-            precounted=n_new if not touched else None,
-        )
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "merge",
-                "schema": schema,
-                "add": adds,
-                "remove": touched,
-                **({"column_mapping": mapping} if mapping is not None else {}),
-            },
-        )
-        return {
-            "version": state["version"] + 1,
-            "files_total": len(state["files"]),
-            "files_skipped_by_stats": len(skipped),
-            "files_probed": len(candidates),
-            "files_rewritten": len(touched),
-        }
-
     _MRG_ACT = "__sn_mrg_act"
 
     def merge_into(
@@ -3313,10 +3120,11 @@ class SnapshotTable:
     ) -> dict:
         """Multi-clause MERGE (the full ANSI / Delta surface — conditional
         matched UPDATE/DELETE, NOT MATCHED INSERT, NOT MATCHED BY SOURCE
-        UPDATE/DELETE), of which :meth:`merge` is the plain-upsert special
-        case. This is the CDC-apply primitive: one call replays a change
-        batch of inserts + updates + deletes, or syncs a target to a
-        source snapshot (``not_matched_by_source`` delete).
+        UPDATE/DELETE), and the table's only keyed upsert: a plain upsert
+        is an update of every source column plus an ``INSERT *``. This
+        is the CDC-apply primitive: one call replays a change batch of
+        inserts + updates + deletes, or syncs a target to a source
+        snapshot (``not_matched_by_source`` delete).
 
         Each clause is a dict: ``{"action": "update", "cond": sql|None,
         "set": {col: sql}}``, ``{"action": "delete", "cond": sql|None}``,
@@ -4005,7 +3813,8 @@ class SnapshotTable:
         survivors = None
         if touched:
             # re-read restricted to the touched files and re-derive the
-            # action column — same two-phase probe/rewrite shape as merge
+            # action column — the same two-phase probe/rewrite shape as
+            # update_where's and delete_where's cow paths
             t2 = self._read_snapshot(state, touched, keep_lineage=True).alias("t")
             j2 = t2.join(
                 join_src, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys], "left"
