@@ -4,9 +4,10 @@ NOT a pytest module — spawned by tests/test_datasource_race.py as
 ``python datasource_race_worker.py <table> <writer_id> <n> <out>``.
 Each worker owns its own JVM + SparkSession and appends through
 ``df.write.format("wopen_snapshot")`` — so the DATASOURCE commit path
-(driver-side _try_commit retry loop with jittered backoff,
-``datasource.py``) is raced by two genuinely independent OS processes,
-not just the engine-class path test_snapshot_race.py covers. The
+(the driver-side append, rebased by ``SnapshotTable._commit``'s retry
+loop with jittered backoff) is raced by two genuinely independent OS
+processes, not just the engine-class path test_snapshot_race.py
+covers. The
 workers stay append-only (append commutes, overwrite does not), so
 every successful write must survive — the property the parent asserts.
 """

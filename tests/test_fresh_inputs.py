@@ -249,6 +249,61 @@ def test_every_private_function_is_referenced():
     assert _unreferenced_private_functions() == set()
 
 
+def _commit_protocol_sites() -> tuple[set[str], set[str]]:
+    """``module:qualified.function`` of every function in wopen_spark/
+    that catches ``CommitConflictError``, and of every function that
+    calls ``put_if_absent``."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "wopen_spark"
+    catches, puts = set(), set()
+
+    def names(node) -> set[str]:
+        return {
+            getattr(n, "id", getattr(n, "attr", None))
+            for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        }
+
+    def visit(node, where: str, qual: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                inner = f"{qual}.{child.name}" if qual else child.name
+                visit(child, where, inner)
+                continue
+            if (
+                isinstance(child, ast.ExceptHandler)
+                and child.type is not None
+                and "CommitConflictError" in names(child.type)
+            ):
+                catches.add(f"{where}:{qual}")
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "put_if_absent"
+            ):
+                puts.add(f"{where}:{qual}")
+            visit(child, where, qual)
+
+    for src in root.rglob("*.py"):
+        visit(ast.parse(src.read_text()), str(src.relative_to(root)), "")
+    return catches, puts
+
+
+def test_every_commit_goes_through_the_funnel():
+    """One publish and one retry loop per log: only the table's commit
+    funnel and the catalog's registry commit touch ``put_if_absent``,
+    and no other code catches a lost race to retry it."""
+    import inspect
+
+    from wopen_spark.snapshot_table import SnapshotTable
+
+    funnels = {"snapshot_table.py:SnapshotTable._commit", "catalog.py:Catalog._commit"}
+    catches, puts = _commit_protocol_sites()
+    assert catches <= funnels
+    assert puts == funnels
+    params = inspect.signature(SnapshotTable.append).parameters
+    assert not {"max_retries", "extra_commit"} & set(params)
+
+
 def test_pooled_table_handle_sees_other_handles_commit(spark, tmp_path):
     """The pooled driver handle replays the log on every read, so a
     commit made through a separate SnapshotTable handle is visible in

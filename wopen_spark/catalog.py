@@ -36,15 +36,16 @@ from __future__ import annotations
 import json
 import os
 import re
-import time
 
 from wopen_spark.snapshot_table import (
+    COMMIT_ATTEMPTS,
     CommitConflictError,
     LocalLogStore,
     LogStore,
     S3ConditionalPutLogStore,
     S3DataStore,
     SnapshotTable,
+    _commit_backoff,
 )
 
 _NAME_RE = re.compile(r"^[A-Za-z_]\w*(\.[A-Za-z_]\w*){0,2}$")
@@ -159,11 +160,10 @@ class Catalog:
         the result as the next version; on a lost put-if-absent race,
         re-read and re-apply (the mutation revalidates against the new
         head, so e.g. a duplicate register surfaces instead of
-        clobbering). Bounded retries with jitter — registry churn is
-        rare, contention resolves in one or two rounds."""
-        import random
-
-        for attempt in range(8):
+        clobbering). Bounded retries with jitter, on the table log's
+        budget and backoff — registry churn is rare, contention resolves
+        in one or two rounds."""
+        for attempt in range(1, COMMIT_ATTEMPTS + 1):
             version, tables = self._head()
             new_tables = mutate(dict(tables))
             blob = json.dumps(
@@ -172,10 +172,11 @@ class Catalog:
             try:
                 self._store.put_if_absent(f"{version + 1:08d}.json", blob)
                 return version + 1
-            except (FileExistsError, CommitConflictError):
-                time.sleep(random.uniform(0, 0.05 * (attempt + 1)))
+            except FileExistsError:
+                if attempt < COMMIT_ATTEMPTS:
+                    _commit_backoff(attempt)
         raise CommitConflictError(
-            f"catalog at {self.root} lost 8 registry commit races"
+            f"catalog at {self.root} lost {COMMIT_ATTEMPTS} registry commit races"
         )
 
     def register(

@@ -83,7 +83,7 @@ from wopen_spark.session import default_cpus
 from wopen_spark.snapshot_table import (
     _DV_FILE,
     _DV_ROW,
-    CommitConflictError,
+    _NO_TABLE,
     LocalDataStore,
     S3ConditionalPutLogStore,
     S3DataStore,
@@ -679,18 +679,6 @@ class _SnapshotCdfStreamReader(DataSourceStreamReader):
         pass  # progress lives in the stream checkpoint, not the table
 
 
-def _race_backoff(attempt: int) -> None:
-    """Sleep a jittered, linearly-growing interval after a lost commit
-    race (full jitter: uniform in [0, 50ms·(attempt+1)]). Keeps N
-    contending writers from lock-stepping through their retry budgets
-    re-reading the same head — the standard contention treatment for
-    conditional-PUT commit protocols."""
-    import random
-    import time
-
-    time.sleep(random.uniform(0, 0.05 * (attempt + 1)))
-
-
 @dataclass
 class _ShardMessage(WriterCommitMessage):
     rels: tuple  # log-relative parquet paths this task wrote
@@ -703,9 +691,11 @@ class _SnapshotWriter(DataSourceArrowWriter):
     commit dir (physical column names, zstd); the driver-side commit
     derives footer stats + bloom sidecars per shard (the same
     ``_add_action`` the engine write paths use) and lands ONE atomic
-    log record; abort deletes the orphan shards. Lost append races
-    retry against the new head — add-only commits commute, files are
-    never rewritten.
+    log record; abort deletes the orphan shards. The record goes
+    through the table's commit funnel: a lost append race rebases onto
+    the new head (add-only commits commute, files are never rewritten);
+    a lost overwrite or create race raises ``CommitConflictError``, so
+    the other writer's commit is never dropped.
 
     Honest boundaries: tables with CHECK constraints or generated
     columns refuse this path at PLAN time (enforcement needs the engine
@@ -841,70 +831,39 @@ class _SnapshotWriter(DataSourceArrowWriter):
         )
         adds = table._add_actions(rels, bloom_phys)
         if self.create:
-            record = {
-                "operation": "create",
-                "schema": json.loads(self.table_schema_json),
-                "cluster_by": self.cluster_by,
-                "add": adds,
-                "remove": [],
-            }
-            table._try_commit(1, record)
+            table._commit(
+                _NO_TABLE,
+                {
+                    "operation": "create",
+                    "schema": json.loads(self.table_schema_json),
+                    "cluster_by": self.cluster_by,
+                    "add": adds,
+                    "remove": [],
+                },
+            )
             return
-        op = "overwrite" if self.overwrite else "append"
-        for attempt in range(5):
-            state = table._state()
-            if state["constraints"] or state["generated"]:
-                raise CommitConflictError(
-                    "a concurrent commit added constraints or generated "
-                    "columns the writer cannot enforce — re-run via "
-                    "SnapshotTable.append"
-                )
-            mp = {}
+
+        def record(head: dict) -> dict:
+            # the plan-time refusals must still hold against the head a
+            # lost race rebases onto; mergeSchema re-merges, and a
+            # racer's rename under the written shards raises
             if self.merge_schema:
-                # re-merge against the current head (the engine append's
-                # retry protocol): our shards stay valid under a racer's
-                # widening, but a racer's rename/mint that moves any of
-                # OUR columns' physical names orphans the written bytes —
-                # surface it, never read-as-null silently
-                rec_schema, new_mapping = table._merged_schema(
-                    state, write_schema, prefer_mapping=mapping
-                )
-                eff = (
-                    new_mapping
-                    if new_mapping is not None
-                    else state["column_mapping"]
-                )
-                if any(
-                    table._phys(mapping, f.name) != table._phys(eff, f.name)
-                    for f in write_schema.fields
-                ):
-                    raise CommitConflictError(
-                        f"wopen_snapshot write to {self.path} raced a "
-                        f"column rename: physical names changed under the "
-                        f"written shards — re-run the write"
-                    )
-                if new_mapping is not None:
-                    mp = {"column_mapping": new_mapping}
+                _refuse_features(head)
+                fields = table._remerge(head, write_schema, mapping)
             else:
-                rec_schema = state["schema"]
-            record = {
-                "operation": op,
-                "schema": rec_schema,
+                _writer_refusals(head, write_schema)
+                fields = {"schema": head["schema"]}
+            return {
+                "operation": "overwrite" if self.overwrite else "append",
+                **fields,
                 "add": adds,
-                "remove": sorted(state["files"]) if self.overwrite else [],
-                **mp,
+                "remove": sorted(head["files"]) if self.overwrite else [],
             }
-            try:
-                table._try_commit(state["version"] + 1, record)
-                return
-            except CommitConflictError:
-                # append commutes; overwrite re-resolves the head. Jittered
-                # backoff so N contending writers on an object store don't
-                # lock-step through all 5 rounds re-reading the same head.
-                _race_backoff(attempt)
-        raise CommitConflictError(
-            f"wopen_snapshot write to {self.path} lost 5 commit races"
-        )
+
+        # an overwrite does not commute: a lost race raises, and abort
+        # deletes the shards
+        state = table._state()
+        table._commit(state, record(state), None if self.overwrite else record)
 
     def abort(self, messages):
         store = _store_from_spec(json.loads(self.store_json))
@@ -951,8 +910,11 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
         self.options = options
         self.commit_dir = f"data/{uuid.uuid4().hex}"
         if table.latest_version() is None:
-            table._try_commit(
-                1,
+            # create-if-absent: a sink that loses the create race to
+            # another sink takes the winner's table, and the refusals
+            # below check the input against its schema
+            table._commit(
+                _NO_TABLE,
                 {
                     "operation": "create",
                     "schema": schema.jsonValue(),
@@ -960,6 +922,7 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
                     "add": [],
                     "remove": [],
                 },
+                rebase=lambda head: None,
             )
         state = table._state()
         _writer_refusals(state, schema)
@@ -989,7 +952,7 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
         # sidecars for clustered tables, and a replay's _cleanup must not
         # have sidecars to leak in the first place
         state = table._state()
-        if self.txn_app in state["txns"] and state["txns"][self.txn_app] >= batchId:
+        if table._txn_seen(self.txn_app, batchId, state):
             self._cleanup(rels)  # replayed epoch: already committed
             return
         mapping = json.loads(self.mapping_json)
@@ -999,30 +962,21 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
             else None
         )
         adds = table._add_actions(rels, bloom_phys)
-        for attempt in range(5):
-            state = table._state()
-            if self.txn_app in state["txns"] and state["txns"][self.txn_app] >= batchId:
-                self._cleanup(rels)  # lost the race to a concurrent replay
-                return
-            _writer_refusals(state, T.StructType.fromJson(json.loads(self.schema_json)))
-            try:
-                table._try_commit(
-                    state["version"] + 1,
-                    {
-                        "operation": "append",
-                        "schema": state["schema"],
-                        "add": adds,
-                        "remove": [],
-                        "txn_app": self.txn_app,
-                        "txn_version": batchId,
-                    },
-                )
-                return
-            except CommitConflictError:
-                _race_backoff(attempt)  # appends commute; re-resolve the head
-        raise CommitConflictError(
-            f"streaming sink epoch {batchId} lost 5 commit races at {self.path}"
-        )
+        schema = T.StructType.fromJson(json.loads(self.schema_json))
+
+        def record(head: dict) -> dict:
+            _writer_refusals(head, schema)
+            return {
+                "operation": "append",
+                "schema": head["schema"],
+                "add": adds,
+                "remove": [],
+                "txn_app": self.txn_app,
+                "txn_version": batchId,
+            }
+
+        if table._commit(state, record(state), record) is None:
+            self._cleanup(rels)  # lost the race to a concurrent replay
 
     def abort(self, messages, batchId: int):
         self._cleanup(

@@ -17,9 +17,16 @@ Delta Lake / Iceberg build it (public designs), sized for 100 TB:
   file list from the log and reads exactly those files; concurrent
   commits can't change what it sees. ``read(version=N)`` /
   ``read(asof_ts=...)`` replay history.
-- **Optimistic concurrency.** ``append`` retries on conflict (appends
-  commute); ``overwrite``/``merge_into``/``delete_where`` raise
-  ``CommitConflictError`` — the caller decides, nothing is clobbered.
+- **Optimistic concurrency, one commit funnel.** Every commit goes
+  through ``SnapshotTable._commit``; a lost race falls in one of three
+  classes. (1) The new head already holds this commit's
+  ``txn_app``/``txn_version``: the racer was our own replay, so the call
+  is a no-op. (2) Commuting appends (``append``, ``copy_into``, the
+  datasource append and stream-sink epoch) rebase onto the new head and
+  retry, with jittered backoff, up to ``COMMIT_ATTEMPTS`` tries. (3)
+  Everything else (create, overwrite, merge, delete, update, compaction,
+  restore, DDL) raises ``CommitConflictError`` — the caller decides,
+  nothing is clobbered.
 - **File-level column stats → copy-on-write at file granularity.**
   Each added file records min/max/null-count per column from parquet
   FOOTERS (pyarrow metadata — no data read). ``merge_into``/``delete_where``
@@ -58,6 +65,7 @@ import io
 import json
 import logging
 import os
+import random
 import re
 import shutil
 import threading
@@ -74,8 +82,14 @@ from pyspark.sql import types as T
 from wopen_spark.localframe import DRIVER_MAX_ROWS, local_df
 
 CHECKPOINT_EVERY = 10
+# tries one commit gets before a commuting write gives up on a
+# contended head (the table funnel and the catalog registry alike)
+COMMIT_ATTEMPTS = 5
 
 _log = logging.getLogger(__name__)
+
+# the state a create commits on top of: version 1 is the first commit
+_NO_TABLE = {"version": 0}
 
 # Reserved row-identity column names for deletion-vector plumbing; the
 # __sn_ prefix keeps them out of any plausible user schema.
@@ -86,6 +100,13 @@ _DUP_MSG = (
     "merge_into: a target row is matched by multiple source "
     "rows — deduplicate the source on the merge key first"
 )
+
+
+def _commit_backoff(lost: int) -> None:
+    """Sleep after the ``lost``-th lost commit race: full jitter,
+    uniform in [0, 50 ms·lost], so N contending writers do not
+    lock-step through their budgets re-reading the same head."""
+    time.sleep(random.uniform(0, 0.05 * lost))
 
 
 class CommitConflictError(RuntimeError):
@@ -1506,56 +1527,110 @@ class SnapshotTable:
             "copy_files": copy_files, "identity": identity, **state,
         }
 
-    def _try_commit(self, version: int, record: dict) -> None:
-        """The atomic publish: one put-if-absent of the next log blob,
-        through the LogStore — POSIX hardlink locally, conditional PUT on
-        an object store. Losing the race raises CommitConflictError; the
-        already-written data files are orphans vacuum's grace window
-        handles."""
-        record = {"version": version, "ts_unix": time.time(), **record}
-        try:
-            self._store.put_if_absent(
-                self._commit_name(version), json.dumps(record).encode()
-            )
-        except FileExistsError:
-            raise CommitConflictError(
-                f"version {version} of {self.path} was committed by another writer"
-            ) from None
-        if version % CHECKPOINT_EVERY == 0:
-            # checkpoints are REBUILDABLE rollups (never the source of
-            # truth) — and the commit above has already been PUBLISHED,
-            # so a checkpoint failure must not escape: the caller would
-            # believe a landed write failed and re-run it (duplicating
-            # rows for non-txn appends). Best-effort, warn, move on —
-            # state resolution just replays more commits until the next
-            # rollup succeeds.
+    def _commit(self, state: dict, record: dict, rebase=None) -> int | None:
+        """Publish ``record`` as the version after ``state["version"]``
+        with one put-if-absent on the log (rolling up a checkpoint every
+        ``CHECKPOINT_EVERY`` versions), and return that version; every
+        table commit goes through here. The first try uses the caller's
+        ``state``, so an uncontended commit reads nothing more. A lost
+        race re-reads the head, then:
+
+        - the head holds this record's ``txn_app`` at or past its
+          ``txn_version`` (our own replay won): return None, no commit;
+        - ``rebase`` is None (non-commuting operations): raise
+          ``CommitConflictError``;
+        - else (commuting appends) retry ``rebase(head)``'s record after
+          a jittered backoff, up to ``COMMIT_ATTEMPTS`` tries; a None
+          record means the head already holds this write: return None.
+
+        Data files written before a commit that raises are orphans
+        vacuum's grace window handles."""
+        op, app = record["operation"], record.get("txn_app")
+        for attempt in range(1, COMMIT_ATTEMPTS + 1):
+            version = state["version"] + 1
+            blob = {"version": version, "ts_unix": time.time(), **record}
             try:
-                st = self._state(version)
-                self._store.put(
-                    self._checkpoint_name(version),
-                    json.dumps(
-                        {
-                            "version": version,
-                            "files": list(st["files"].values()),
-                            "dvs": st["dvs"],
-                            "schema": st["schema"],
-                            "cluster_by": st["cluster_by"],
-                            "column_mapping": st["column_mapping"],
-                            "retired_phys": st["retired_phys"],
-                            "constraints": st["constraints"],
-                            "generated": st["generated"],
-                            "txns": st["txns"],
-                            "copy_files": sorted(st["copy_files"]),
-                            "identity": st["identity"],
-                        }
-                    ).encode(),
+                self._store.put_if_absent(
+                    self._commit_name(version), json.dumps(blob).encode()
                 )
-            except Exception as e:  # noqa: BLE001 — advisory blob only
-                _log.warning(
-                    "checkpoint %d of %s not written (%s); log replay "
-                    "continues from the previous checkpoint",
-                    version, self.path, e,
+            except FileExistsError:
+                _log.info(
+                    "commit %s of %s lost the race for version %d (attempt %d)",
+                    op, self.path, version, attempt,
                 )
+            else:
+                if version % CHECKPOINT_EVERY == 0:
+                    self._checkpoint(version)
+                return version
+            if rebase is not None and attempt < COMMIT_ATTEMPTS:
+                _commit_backoff(attempt)
+            state = self._state()
+            if app is not None and self._txn_seen(app, record["txn_version"], state):
+                return None
+            if rebase is None:
+                raise CommitConflictError(
+                    f"{op} on {self.path}: version {version} was committed "
+                    "by another writer"
+                )
+            if attempt == COMMIT_ATTEMPTS:
+                break
+            record = rebase(state)
+            if record is None:
+                return None
+            _log.info(
+                "commit %s of %s rebased to version %d (attempt %d)",
+                op, self.path, state["version"] + 1, attempt + 1,
+            )
+        _log.warning(
+            "commit %s of %s gave up after losing %d races, the last for "
+            "version %d", op, self.path, COMMIT_ATTEMPTS, version,
+        )
+        raise CommitConflictError(
+            f"{op} on {self.path} lost {COMMIT_ATTEMPTS} commit races"
+        )
+
+    def _commit_metadata(self, state: dict, op: str, **fields) -> int:
+        """Commit a metadata-only (``dataChange: false``) record."""
+        return self._commit(
+            state,
+            {"operation": op, **fields, "add": [], "remove": [], "dataChange": False},
+        )
+
+    def _checkpoint(self, version: int) -> None:
+        """Roll the manifest at ``version`` up into its checkpoint blob.
+        Checkpoints are REBUILDABLE rollups (never the source of truth),
+        and the commit has already been PUBLISHED, so a failure here must
+        not escape: the caller would believe a landed write failed and
+        re-run it (duplicating rows for non-txn appends). Best-effort,
+        warn, move on — state resolution just replays more commits until
+        the next rollup succeeds."""
+        try:
+            st = self._state(version)
+            self._store.put(
+                self._checkpoint_name(version),
+                json.dumps(
+                    {
+                        "version": version,
+                        "files": list(st["files"].values()),
+                        "dvs": st["dvs"],
+                        "schema": st["schema"],
+                        "cluster_by": st["cluster_by"],
+                        "column_mapping": st["column_mapping"],
+                        "retired_phys": st["retired_phys"],
+                        "constraints": st["constraints"],
+                        "generated": st["generated"],
+                        "txns": st["txns"],
+                        "copy_files": sorted(st["copy_files"]),
+                        "identity": st["identity"],
+                    }
+                ).encode(),
+            )
+        except Exception as e:  # noqa: BLE001 — advisory blob only
+            _log.warning(
+                "checkpoint %d of %s not written (%s); log replay "
+                "continues from the previous checkpoint",
+                version, self.path, e,
+            )
 
     # ---------------------------------------------------------- data layer
 
@@ -1935,8 +2010,8 @@ class SnapshotTable:
                 raise ValueError(
                     f"cluster_by references unknown column(s): {unknown}"
                 )
-        self._try_commit(
-            1,
+        return self._commit(
+            _NO_TABLE,
             {
                 "operation": "convert",
                 "schema": schema.jsonValue(),
@@ -1945,7 +2020,6 @@ class SnapshotTable:
                 "remove": [],
             },
         )
-        return 1
 
     def create(self, df: DataFrame, cluster_by: list[str] | None = None) -> int:
         """Create the table at version 1 from ``df`` (may be empty — an
@@ -1957,8 +2031,8 @@ class SnapshotTable:
         # fewer full computation of the incoming plan (isEmpty under a
         # shuffle runs every upstream map stage)
         adds = self._write_files(df, cluster_by)
-        self._try_commit(
-            1,
+        return self._commit(
+            _NO_TABLE,
             {
                 "operation": "create",
                 "schema": df.schema.jsonValue(),
@@ -1967,19 +2041,16 @@ class SnapshotTable:
                 "remove": [],
             },
         )
-        return 1
 
     def append(
         self,
         df: DataFrame,
-        max_retries: int = 5,
         txn_app: str | None = None,
         txn_version: int | None = None,
-        extra_commit: dict | None = None,
     ) -> int:
         """Blind append: add-only, so conflicting appends commute — on a
-        lost race the commit retries against the new head (files are
-        already written; only the log create repeats).
+        lost race the commit rebases onto the new head and retries
+        (files are already written; only the log create repeats).
 
         ``txn_app``/``txn_version`` make the append IDEMPOTENT for
         exactly-once streaming sinks (the Delta ``txnAppId/txnVersion``
@@ -1992,95 +2063,93 @@ class SnapshotTable:
         state = self._state()
         if txn_app is not None and self._txn_seen(txn_app, txn_version, state):
             return state["version"]  # replayed batch: already committed
+        txn = {"txn_app": txn_app, "txn_version": txn_version} if txn_app else {}
+        v = self._append(state, df, {"operation": "append", **txn})
+        return self.latest_version() if v is None else v  # None: replay won
+
+    def _append(
+        self, state: dict, df: DataFrame, base: dict, recheck=None
+    ) -> int | None:
+        """Write ``df``'s files once and commit them as ``base`` plus the
+        add actions on top of ``state`` (``_commit``'s return). A lost
+        race rebases the record onto the new head; ``recheck(head)``
+        runs first and returns False when the head already holds this
+        write (nothing to commit)."""
         df = self._apply_generated(df, state)
         df, id_bases = self._apply_identity(df, state)
         self._enforce(df, state["constraints"], state["schema"])
-        enforced = state["constraints"]
-        gen_seen = state["generated"]
         schema, mapping = self._merged_schema(state, df)
         write_mapping = mapping if mapping is not None else state["column_mapping"]
         df = self._conform(df, schema)
         adds = self._write_files(df, state["cluster_by"], write_mapping)
-        txn = {"txn_app": txn_app, "txn_version": txn_version} if txn_app else {}
-        mp = {"column_mapping": mapping} if mapping is not None else {}
-        extra = extra_commit or {}
         if id_bases:
             hi = self._identity_high_from_adds(id_bases, adds, write_mapping)
             if hi:
-                extra = {**extra, "identity_high": hi}
-        for _ in range(max_retries):
-            try:
-                self._try_commit(
-                    state["version"] + 1,
-                    {"operation": "append", "schema": schema, "add": adds,
-                     "remove": [], **txn, **mp, **extra},
-                )
-                return state["version"] + 1
-            except CommitConflictError:
-                state = self._state()
-                if txn_app is not None and self._txn_seen(txn_app, txn_version, state):
-                    return state["version"]  # the racer WAS our replay
-                # a racer ADVANCED an identity high-water mark we
-                # allocated from: our written ids may collide with
-                # theirs — committing would duplicate identity values,
-                # so surface it (the caller re-runs and re-allocates)
-                for c, base in id_bases.items():
-                    spec = state["identity"][c]
-                    fresh = (
-                        spec["high"]
-                        if spec["high"] is not None
-                        else spec["start"] - spec["step"]
+                base = {**base, "identity_high": hi}
+        seen = {k: state[k] for k in ("constraints", "generated")}
+
+        def record(fields: dict) -> dict:
+            return {**base, **fields, "add": adds, "remove": []}
+
+        def rebase(head: dict) -> dict | None:
+            if recheck is not None and not recheck(head):
+                return None
+            # a racer ADVANCED an identity high-water mark we allocated
+            # from: our written ids may collide with theirs — committing
+            # would duplicate identity values (the caller re-runs)
+            for c, b in id_bases.items():
+                spec = head["identity"][c]
+                high = spec["high"]
+                if high is None:
+                    high = spec["start"] - spec["step"]
+                if high != b:
+                    raise CommitConflictError(
+                        f"append to {self.path} raced an identity "
+                        f"allocation on {c!r} — re-run the append"
                     )
-                    if fresh != base:
-                        raise CommitConflictError(
-                            f"append to {self.path} raced an identity "
-                            f"allocation on {c!r} — re-run the append"
-                        ) from None
-                # the racer may have ADDED a constraint: re-enforce when
-                # the active set changed (Delta fails such txns outright;
-                # an add-only append can simply re-validate and proceed)
-                if state["constraints"] != enforced:
-                    self._enforce(df, state["constraints"], state["schema"])
-                    enforced = state["constraints"]
-                # a racer CHANGED the generated-column rules: our files
-                # were computed/validated under the old rules and cannot
-                # be re-derived in place - surface it (caller re-runs;
-                # constraints above only re-VALIDATE, so they can retry)
-                if state["generated"] != gen_seen:
-                    raise CommitConflictError(
-                        f"append to {self.path} raced a generated-column "
-                        f"definition change - re-run the append"
-                    ) from None
-                # re-merge against the new head: our files are already
-                # written and stay valid against a racer's WIDENING
-                # (narrow files read through a wider schema). Pass the
-                # physicals we wrote with so an ordinary lost race (the
-                # racer was a plain append) reuses them instead of
-                # re-minting — only a GENUINE conflicting rename/mint
-                # trips the guard below.
-                schema, mapping = self._merged_schema(
-                    state, df, prefer_mapping=write_mapping
+            # a racer CHANGED the generated-column rules: our files were
+            # computed under the old rules and cannot be re-derived in
+            # place (constraints below only re-VALIDATE, so they rebase)
+            if head["generated"] != seen["generated"]:
+                raise CommitConflictError(
+                    f"append to {self.path} raced a generated-column "
+                    f"definition change - re-run the append"
                 )
-                # ...but NOT against a racer's rename/mint that changes
-                # any of our columns' physical names — the files on disk
-                # carry the old physicals, and committing the new mapping
-                # over them would read those columns as null. Rare
-                # (concurrent rename + append); surface it instead of
-                # silently orphaning data. The caller re-runs the append.
-                new_eff = mapping if mapping is not None else state["column_mapping"]
-                if any(
-                    self._phys(write_mapping, c) != self._phys(new_eff, c)
-                    for c in df.columns
-                ):
-                    raise CommitConflictError(
-                        f"append to {self.path} raced a column rename: "
-                        f"physical names changed under the written files — "
-                        f"re-run the append"
-                    ) from None
-                mp = {"column_mapping": mapping} if mapping is not None else {}
-        raise CommitConflictError(
-            f"append to {self.path} lost {max_retries} commit races"
+            # a racer ADDED a constraint: re-enforce (Delta fails such
+            # txns outright; an add-only append can re-validate)
+            if head["constraints"] != seen["constraints"]:
+                self._enforce(df, head["constraints"], head["schema"])
+                seen["constraints"] = head["constraints"]
+            return record(self._remerge(head, df, write_mapping))
+
+        mp = {"column_mapping": mapping} if mapping is not None else {}
+        return self._commit(state, record({"schema": schema, **mp}), rebase)
+
+    def _remerge(self, head: dict, written, write_mapping: dict | None) -> dict:
+        """The ``schema``/``column_mapping`` record fields for files
+        already written with ``write_mapping``, re-merged against a new
+        ``head`` (``written``: the frame or its StructType). The files
+        stay valid under a racer's widening, and the physicals they were
+        written with are reused, so a plain racing append rebases
+        cleanly. A racer's rename or mint that moves any written
+        column's physical name would read those bytes as null: that
+        raises, and the caller re-runs the write."""
+        schema, mapping = self._merged_schema(
+            head, written, prefer_mapping=write_mapping
         )
+        eff = mapping if mapping is not None else head["column_mapping"]
+        names = (
+            written.fieldNames()
+            if isinstance(written, T.StructType)
+            else written.columns
+        )
+        if any(self._phys(write_mapping, c) != self._phys(eff, c) for c in names):
+            raise CommitConflictError(
+                f"write to {self.path} raced a column rename: physical "
+                f"names changed under the written files — re-run the write"
+            )
+        mp = {"column_mapping": mapping} if mapping is not None else {}
+        return {"schema": schema, **mp}
 
     def set_identity_column(self, name: str, start: int = 1, step: int = 1) -> int:
         """Declare ``name`` a GENERATED ALWAYS AS IDENTITY column (the
@@ -2120,19 +2189,10 @@ class SnapshotTable:
             raise ValueError(f"column {name!r} already has a generation rule")
         if step == 0:
             raise ValueError("identity step must be non-zero")
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "set_identity",
-                "identity_set": {
-                    name: {"start": int(start), "step": int(step), "high": None}
-                },
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
+        spec = {"start": int(start), "step": int(step), "high": None}
+        return self._commit_metadata(
+            state, "set_identity", identity_set={name: spec}
         )
-        return state["version"] + 1
 
     def _apply_identity(
         self, df: DataFrame, state: dict
@@ -2240,44 +2300,45 @@ class SnapshotTable:
             return f"{p}:{st.st_size}:{st.st_mtime_ns}"
 
         fresh = [(p, ident(p)) for p in paths]
-        # single-attempt append inside a re-check loop: a lost commit
-        # race re-reads the loaded-file set FIRST, so a concurrent copy
-        # of the same files becomes a skip (exactly-once), while an
-        # unrelated racing append just costs a retry
-        for _ in range(5):
-            new = [(p, i) for p, i in fresh if i not in seen]
-            skipped = len(fresh) - len(new)
-            if not new:
-                return {
-                    "version": state["version"],
-                    "files_loaded": 0,
-                    "files_skipped": skipped,
-                }
-            reader = self.spark.read.format(file_format).options(
-                **(options or {})
-            )
-            df = reader.load([p for p, _ in new])
-            try:
-                v = self.append(
-                    df,
-                    max_retries=1,
-                    extra_commit={
-                        "operation": "copy_into",
-                        "copy_add": [i for _, i in new],
-                    },
-                )
-            except CommitConflictError:
-                state = self._state()
-                seen = state["copy_files"]
-                continue
+        new = [(p, i) for p, i in fresh if i not in seen]
+        skipped = len(fresh) - len(new)
+        if not new:
             return {
-                "version": v,
-                "files_loaded": len(new),
+                "version": state["version"],
+                "files_loaded": 0,
                 "files_skipped": skipped,
             }
-        raise CommitConflictError(
-            f"copy_into {self.path} lost 5 commit races"
+        ids = {i for _, i in new}
+
+        def recheck(head: dict) -> bool:
+            # a lost race checks the loaded-file set FIRST: a concurrent
+            # copy of all of our files makes this one a skip (exactly
+            # once), an unrelated append just a rebase
+            loaded = ids & head["copy_files"]
+            if loaded == ids:
+                return False
+            if loaded:
+                raise CommitConflictError(
+                    f"copy_into {self.path} raced a copy of "
+                    f"{len(loaded)} of its {len(ids)} files — re-run "
+                    "copy_into"
+                )
+            return True
+
+        reader = self.spark.read.format(file_format).options(**(options or {}))
+        df = reader.load([p for p, _ in new])
+        v = self._append(
+            state, df,
+            {"operation": "copy_into", "copy_add": [i for _, i in new]},
+            recheck,
         )
+        if v is None:  # a racing copy loaded every one of our files
+            return {
+                "version": self.latest_version(),
+                "files_loaded": 0,
+                "files_skipped": len(fresh),
+            }
+        return {"version": v, "files_loaded": len(new), "files_skipped": skipped}
 
     def _txn_seen(self, app: str, version: int, state: dict) -> bool:
         """Has ``app`` already committed transaction ``version`` (or
@@ -2357,33 +2418,15 @@ class SnapshotTable:
             raise ValueError(f"constraint {name} already exists")
         if state["files"]:
             self._enforce(self._read_snapshot(state), {name: expr_sql})
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "add_constraint",
-                "constraint_add": {name: expr_sql},
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
+        return self._commit_metadata(
+            state, "add_constraint", constraint_add={name: expr_sql}
         )
-        return state["version"] + 1
 
     def drop_constraint(self, name: str) -> int:
         state = self._state()
         if name not in state["constraints"]:
             raise ValueError(f"no constraint named {name}")
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "drop_constraint",
-                "constraint_drop": name,
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
-        )
-        return state["version"] + 1
+        return self._commit_metadata(state, "drop_constraint", constraint_drop=name)
 
     def set_cluster_by(self, cluster_by: list[str] | None) -> int:
         """Clustering evolution (the Iceberg partition-evolution analog
@@ -2401,17 +2444,7 @@ class SnapshotTable:
         unknown = [c for c in cols if c not in names]
         if unknown:
             raise ValueError(f"cluster_by references unknown column(s): {unknown}")
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "set_cluster_by",
-                "cluster_by": cols,
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
-        )
-        return state["version"] + 1
+        return self._commit_metadata(state, "set_cluster_by", cluster_by=cols)
 
     def constraints(self) -> dict[str, str]:
         """Active CHECK constraints: {name: sql_expr}."""
@@ -2448,17 +2481,10 @@ class SnapshotTable:
             self.spark, [], T.StructType.fromJson(state["schema"])
         )
         probe.select(F.expr(expr_sql).cast(dtype_ddl)).schema  # analyzes
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "add_generated_column",
-                "generated_add": {name: {"expr": expr_sql, "type": dtype_ddl}},
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
+        return self._commit_metadata(
+            state, "add_generated_column",
+            generated_add={name: {"expr": expr_sql, "type": dtype_ddl}},
         )
-        return state["version"] + 1
 
     def drop_generated_column(self, name: str) -> int:
         """Drop just the GENERATION RULE; the column itself stays (drop
@@ -2467,17 +2493,9 @@ class SnapshotTable:
         state = self._state()
         if name not in state["generated"]:
             raise ValueError(f"no generated column named {name}")
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "drop_generated_column",
-                "generated_drop": name,
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
+        return self._commit_metadata(
+            state, "drop_generated_column", generated_drop=name
         )
-        return state["version"] + 1
 
     def generated_columns(self) -> dict[str, dict]:
         return dict(self._state()["generated"])
@@ -2637,8 +2655,8 @@ class SnapshotTable:
                 if p not in retired:
                     retired.append(p)
         adds = self._write_files(df, state["cluster_by"], mapping)
-        self._try_commit(
-            state["version"] + 1,
+        v = self._commit(
+            state,
             {
                 "operation": "overwrite",
                 "schema": df.schema.jsonValue(),
@@ -2653,7 +2671,7 @@ class SnapshotTable:
                 ),
             },
         )
-        return state["version"] + 1
+        return self.latest_version() if v is None else v  # None: replay won
 
     @staticmethod
     def _constraints_referencing(constraints: dict[str, str], col: str) -> list[str]:
@@ -2702,19 +2720,10 @@ class SnapshotTable:
         cluster = state["cluster_by"]
         if cluster:
             cluster = [new if c == old else c for c in cluster]
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "rename",
-                "schema": T.StructType(fields).jsonValue(),
-                "column_mapping": mapping,
-                "cluster_by": cluster,
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
+        return self._commit_metadata(
+            state, "rename", schema=T.StructType(fields).jsonValue(),
+            column_mapping=mapping, cluster_by=cluster,
         )
-        return state["version"] + 1
 
     def drop_column(self, name: str) -> int:
         """Metadata-only column drop: the field leaves the schema (and
@@ -2752,20 +2761,10 @@ class SnapshotTable:
         cluster = state["cluster_by"]
         if cluster:
             cluster = [c for c in cluster if c != name]
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "drop",
-                "schema": T.StructType(fields).jsonValue(),
-                "column_mapping": mapping,
-                "retired_phys": retired,
-                "cluster_by": cluster,
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
+        return self._commit_metadata(
+            state, "drop", schema=T.StructType(fields).jsonValue(),
+            column_mapping=mapping, retired_phys=retired, cluster_by=cluster,
         )
-        return state["version"] + 1
 
     def add_columns(self, cols: list[tuple[str, str]]) -> int:
         """Metadata-only column add: each ``(name, type_ddl)`` joins the
@@ -2790,18 +2789,8 @@ class SnapshotTable:
                 raise ValueError(f"duplicate new column {name!r}")
             add = add.add(name, T.StructType.fromDDL(f"x {ddl}")[0].dataType, True)
         schema_json, mapping = self._merged_schema(state, add)
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "add_columns",
-                "schema": schema_json,
-                **({"column_mapping": mapping} if mapping is not None else {}),
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
-        )
-        return state["version"] + 1
+        mp = {"column_mapping": mapping} if mapping is not None else {}
+        return self._commit_metadata(state, "add_columns", schema=schema_json, **mp)
 
     def widen_column(self, name: str, type_ddl: str) -> int:
         """Metadata-only lossless type widening (byte<short<int<long,
@@ -2829,17 +2818,9 @@ class SnapshotTable:
             T.StructField(f.name, want if f.name == name else f.dataType, f.nullable)
             for f in schema.fields
         ]
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "widen_column",
-                "schema": T.StructType(fields).jsonValue(),
-                "add": [],
-                "remove": [],
-                "dataChange": False,
-            },
+        return self._commit_metadata(
+            state, "widen_column", schema=T.StructType(fields).jsonValue()
         )
-        return state["version"] + 1
 
     # Types whose footer stats compare faithfully against Spark-collected
     # bounds after _json_safe. Timestamps are EXCLUDED: parquet footers
@@ -3470,22 +3451,23 @@ class SnapshotTable:
             return {
                 "version": state["version"], **report, "files_masked": 0, "noop": True,
             }
-        self._try_commit(
-            state["version"] + 1,
-            {
-                "operation": "merge",
-                "add": adds,
-                "dv_add": dv_add,
-                "schema": state["schema"],
-                **({"txn_app": txn_app, "txn_version": txn_version} if txn_app else {}),
-            },
+        return self._commit_merge(
+            state,
+            {"add": adds, "dv_add": dv_add, "schema": state["schema"]},
+            txn_app, txn_version,
+            {**report, "files_masked": len(masked_rels), "rows_claimed": mask.num_rows},
         )
-        return {
-            "version": state["version"] + 1,
-            **report,
-            "files_masked": len(masked_rels),
-            "rows_claimed": mask.num_rows,
-        }
+
+    def _commit_merge(
+        self, state: dict, record: dict, txn_app, txn_version, report: dict
+    ) -> dict:
+        """Commit one merge and return its report; a racer that already
+        committed this merge's txn makes it a replay."""
+        txn = {"txn_app": txn_app, "txn_version": txn_version} if txn_app else {}
+        v = self._commit(state, {"operation": "merge", **record, **txn})
+        if v is None:
+            return {"version": self.latest_version(), "replayed": True}
+        return {"version": v, **report}
 
     def _put_parquet(self, rel_dir: str, table) -> str:
         """Write one Arrow table as one parquet file under ``rel_dir``
@@ -3769,25 +3751,18 @@ class SnapshotTable:
                     "files_masked": 0,
                     "noop": True,
                 }
-            self._try_commit(
-                state["version"] + 1,
+            return self._commit_merge(
+                state, {"add": adds, "dv_add": dv_add, **extras},
+                txn_app, txn_version,
                 {
-                    "operation": "merge",
-                    "add": adds,
-                    "dv_add": dv_add,
-                    **extras,
-                    **({"txn_app": txn_app, "txn_version": txn_version} if txn_app else {}),
+                    "files_total": len(state["files"]),
+                    "files_skipped_by_stats": len(skipped),
+                    "files_probed": len(cand),
+                    "files_rewritten": 0,
+                    "files_masked": len(masked_rels),
+                    "rows_claimed": n_rows,
                 },
             )
-            return {
-                "version": state["version"] + 1,
-                "files_total": len(state["files"]),
-                "files_skipped_by_stats": len(skipped),
-                "files_probed": len(cand),
-                "files_rewritten": 0,
-                "files_masked": len(masked_rels),
-                "rows_claimed": n_rows,
-            }
 
         by_base = self._rels_by_basename(state)
         # fused probe: per-file max claim count yields the touched-file
@@ -3866,23 +3841,16 @@ class SnapshotTable:
                 "files_rewritten": 0,
                 "noop": True,
             }
-        self._try_commit(
-            state["version"] + 1,
+        return self._commit_merge(
+            state, {"add": adds, "remove": touched, **extras},
+            txn_app, txn_version,
             {
-                "operation": "merge",
-                "add": adds,
-                "remove": touched,
-                **extras,
-                **({"txn_app": txn_app, "txn_version": txn_version} if txn_app else {}),
+                "files_total": len(state["files"]),
+                "files_skipped_by_stats": len(skipped),
+                "files_probed": len(cand),
+                "files_rewritten": len(touched),
             },
         )
-        return {
-            "version": state["version"] + 1,
-            "files_total": len(state["files"]),
-            "files_skipped_by_stats": len(skipped),
-            "files_probed": len(cand),
-            "files_rewritten": len(touched),
-        }
 
     def delete_where(self, predicate_sql: str, mode: str = "cow") -> dict:
         """Delete rows matching the predicate.
@@ -3910,12 +3878,9 @@ class SnapshotTable:
                 F.expr(predicate_sql)
             )
             dv_add, masked_rels, n_rows = self._write_dv(state, matches)
-            self._try_commit(
-                state["version"] + 1,
-                {"operation": "delete", "dv_add": dv_add},
-            )
+            v = self._commit(state, {"operation": "delete", "dv_add": dv_add})
             return {
-                "version": state["version"] + 1,
+                "version": v,
                 "files_total": len(all_files),
                 "files_rewritten": 0,
                 "files_masked": len(masked_rels),
@@ -3939,12 +3904,9 @@ class SnapshotTable:
             adds = self._write_files(
                 kept, state["cluster_by"], mapping, adaptive=True
             )
-        self._try_commit(
-            state["version"] + 1,
-            {"operation": "delete", "add": adds, "remove": touched},
-        )
+        v = self._commit(state, {"operation": "delete", "add": adds, "remove": touched})
         return {
-            "version": state["version"] + 1,
+            "version": v,
             "files_total": len(all_files),
             "files_rewritten": len(touched),
         }
@@ -4020,12 +3982,12 @@ class SnapshotTable:
                     )
             finally:
                 matched.unpersist()
-            self._try_commit(
-                state["version"] + 1,
+            v = self._commit(
+                state,
                 {"operation": "update", "add": adds, "dv_add": dv_add},
             )
             return {
-                "version": state["version"] + 1,
+                "version": v,
                 "files_total": len(state["files"]),
                 "files_rewritten": 0,
                 "files_masked": len(masked_rels),
@@ -4060,12 +4022,9 @@ class SnapshotTable:
                 kept, state["cluster_by"], state["column_mapping"],
                 adaptive=True,
             )
-        self._try_commit(
-            state["version"] + 1,
-            {"operation": "update", "add": adds, "remove": touched},
-        )
+        v = self._commit(state, {"operation": "update", "add": adds, "remove": touched})
         return {
-            "version": state["version"] + 1,
+            "version": v,
             "files_total": len(state["files"]),
             "files_rewritten": len(touched),
         }
@@ -4322,8 +4281,8 @@ class SnapshotTable:
             {"paths": rels, "for": [rel]}  # no "rows": original dv row
             for rel, rels in sorted(old["dvs"].items())  # counts are not
         ]  # tracked per file in state; history shows 0 masked for restores
-        self._try_commit(
-            cur["version"] + 1,
+        return self._commit(
+            cur,
             {
                 "operation": "restore",
                 "restore_of": version,
@@ -4336,7 +4295,6 @@ class SnapshotTable:
                 "dv_add": dv_add,
             },
         )
-        return cur["version"] + 1
 
     def history(self) -> list[dict]:
         out = []
@@ -4409,13 +4367,13 @@ class SnapshotTable:
         adds = self._write_files(
             df.coalesce(target_files), state["cluster_by"], state["column_mapping"]
         )
-        self._try_commit(
-            state["version"] + 1,
+        v = self._commit(
+            state,
             {"operation": "compact", "add": adds, "remove": sorted(state["files"]),
              "dataChange": False},
         )
         return {
-            "version": state["version"] + 1,
+            "version": v,
             "files_before": len(state["files"]),
             "files_after": len(adds),
         }
@@ -4487,8 +4445,8 @@ class SnapshotTable:
         adds = self._write_files(
             df.coalesce(int(n_out)), state["cluster_by"], state["column_mapping"]
         )
-        self._try_commit(
-            state["version"] + 1,
+        v = self._commit(
+            state,
             {
                 "operation": "compact",
                 "add": adds,
@@ -4497,7 +4455,7 @@ class SnapshotTable:
             },
         )
         return {
-            "version": state["version"] + 1,
+            "version": v,
             "files_before": len(state["files"]),
             "files_in_scope": len(in_scope),
             "files_selected": len(qualify),
@@ -4568,13 +4526,13 @@ class SnapshotTable:
             .select(*df.columns)
         )
         adds = self._write_files(clustered, None, state["column_mapping"])
-        self._try_commit(
-            state["version"] + 1,
+        v = self._commit(
+            state,
             {"operation": "zorder", "add": adds, "remove": sorted(state["files"]),
              "dataChange": False},
         )
         return {
-            "version": state["version"] + 1,
+            "version": v,
             "files_before": len(state["files"]),
             "files_after": len(adds),
             "zorder_by": cols,
