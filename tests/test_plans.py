@@ -1256,6 +1256,52 @@ def test_bounded_dv_upsert_run_once_jobs(spark, tmp_path):
     assert table.read().count() == len({r.id for r in table.read().collect()})
 
 
+def test_bounded_snapshot_reads_run_at_most_one_job(spark, tmp_path, monkeypatch):
+    """A snapshot read whose files fit the driver budget reads them with
+    pyarrow on the driver and lands a local relation: Spark folds a point
+    ``read_where``'s filter into it, so its ``collect()`` runs no job,
+    and a change feed's ``toPandas()`` runs at most one. The Spark scan
+    these replace runs 2 jobs for each on this table (the dv mask
+    broadcast included). Below the table's size both reads take that
+    scan and return the same rows."""
+    from pyspark.sql import types as T
+
+    from tests.conftest import upsert
+    from wopen_spark import snapshot_table as st
+    from wopen_spark.snapshot_table import SnapshotTable
+
+    schema = T._parse_datatype_string("id long, ts long, amount double, name string")
+    table = SnapshotTable(spark, str(tmp_path / "t"))
+    table.create(
+        spark.createDataFrame([(i, 0, 1.0, "x") for i in range(2000)], schema).coalesce(4)
+    )
+    v0 = table.latest_version()
+    upsert(
+        table,
+        spark.createDataFrame([(i, 1, 2.0, "y") for i in range(0, 3000, 7)], schema),
+        "id",
+        mode="dv",
+    )
+    v1 = table.latest_version()
+
+    def point():
+        return sorted(tuple(r) for r in table.read_where({"id": (700, 700)})[0].collect())
+
+    def changes():
+        pdf = table.read_changes(v0, v1).toPandas()
+        return sorted(pdf.itertuples(index=False, name=None))
+
+    rows, jobs = _jobs_in_group(spark, "point-read", point)
+    assert rows == [(700, 1, 2.0, "y")] and jobs == [], jobs
+    feed, jobs = _jobs_in_group(spark, "change-read", changes)
+    assert len(jobs) <= 1, jobs
+    monkeypatch.setattr(st, "DRIVER_MAX_ROWS", 1)
+    scanned, jobs = _jobs_in_group(spark, "point-scan", point)
+    assert scanned == rows and jobs, jobs
+    scanned, jobs = _jobs_in_group(spark, "change-scan", changes)
+    assert scanned == feed and jobs, jobs
+
+
 def test_gate_small_sees_rewritten_files(spark, tmp_path, monkeypatch):
     """Overwriting the files under a path keeps the frame's semanticHash,
     so the gate must re-read the footers: 10 rows gate small, and the

@@ -81,14 +81,13 @@ from pyspark.sql.datasource import (
 
 from wopen_spark.session import default_cpus
 from wopen_spark.snapshot_table import (
-    _DV_FILE,
-    _DV_ROW,
     _NO_TABLE,
     LocalDataStore,
     S3ConditionalPutLogStore,
     S3DataStore,
     SnapshotTable,
     VacuumedVersionError,
+    _entry_batches,
     uri_to_path,
 )
 
@@ -303,78 +302,16 @@ def _group_file_entries(
 
 
 def _task_rows(task: _FileTask):
-    """Executor-side: read the group's parquet files through the logical
-    schema, apply deletion-vector masks by row position, optionally tag
-    CDF columns. Yields pyarrow RecordBatches matching the declared
-    Spark schema. All bytes come through the partition's DataStore —
-    POSIX handle for local roots, object GET for s3. Schema/mapping are
-    parsed and the store opened ONCE per task, however many files the
-    group holds."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = T.StructType.fromJson(json.loads(task.schema_json))
-    mapping = json.loads(task.mapping_json)
-    phys_of = lambda c: mapping.get(c, c)  # noqa: E731
-    store = _store_from_spec(json.loads(task.store_json))
-    target = to_arrow_schema(schema)
-    logical_names = [f.name for f in schema.fields]
-
-    for file_rel, dv_rel, semi_rel, change_type, commit_version in task.files:
-        pf = pq.ParquetFile(store.open_input(file_rel))
-        present = set(pf.schema_arrow.names)
-        want_phys = [
-            phys_of(f.name) for f in schema.fields if phys_of(f.name) in present
-        ]
-        tbl = pf.read(columns=want_phys)
-
-        mask_rows: set[int] | None = None
-        base = os.path.basename(file_rel)
-        for kind, paths in (("anti", dv_rel), ("semi", semi_rel)):
-            if not paths:
-                continue
-            hit: set[int] = set()
-            for p in paths:
-                # row-group/page-predicated read: a mask covering 100
-                # files must not materialize all its rows in every
-                # file's task
-                mt = pq.read_table(
-                    store.open_input(p), filters=[(_DV_FILE, "=", base)]
-                )
-                hit.update(mt.column(_DV_ROW).to_pylist())
-            if kind == "anti":
-                mask_rows = hit if mask_rows is None else mask_rows | hit
-            else:
-                # semi: keep exactly the newly-masked rows
-                keep = hit - (mask_rows or set())
-                sel = sorted(i for i in keep if i < tbl.num_rows)
-                tbl = tbl.take(pa.array(sel, type=pa.int64()))
-                mask_rows = None
-                break
-        if mask_rows:
-            import numpy as np
-
-            keep = np.ones(tbl.num_rows, dtype=bool)
-            idx = [i for i in mask_rows if i < tbl.num_rows]
-            keep[idx] = False
-            tbl = tbl.filter(pa.array(keep))
-
-        # physical -> logical names, null-fill absent (pre-widening)
-        # columns, cast to the EXACT arrow schema the Spark schema implies
-        out_cols, n = [], tbl.num_rows
-        for f in schema.fields:
-            if f.name in ("_change_type", "_commit_version"):
-                val = change_type if f.name == "_change_type" else commit_version
-                out_cols.append(pa.repeat(val, n))
-                continue
-            p = phys_of(f.name)
-            if p in present:
-                out_cols.append(tbl.column(p))
-            else:
-                out_cols.append(pa.nulls(n))
-        result = pa.table(out_cols, names=logical_names).cast(target, safe=False)
-        yield from result.to_batches(max_chunksize=1 << 16)
+    """Executor-side: the group's rows through ``_entry_batches``, the
+    reader the driver-side snapshot reads use too, over the partition's
+    DataStore. Schema and mapping are parsed and the store opened ONCE
+    per task, however many files the group holds."""
+    yield from _entry_batches(
+        _store_from_spec(json.loads(task.store_json)),
+        task.files,
+        T.StructType.fromJson(json.loads(task.schema_json)),
+        json.loads(task.mapping_json),
+    )
 
 
 class _SnapshotBatchReader(DataSourceReader):
@@ -427,24 +364,18 @@ class _SnapshotBatchReader(DataSourceReader):
     def partitions(self):
         table = _resolve_table(self.path, self.options)
         state = table._state(_resolve_version(table, self.options))
-        store_json = json.dumps(_store_spec(self.path, self.options))
-        schema_json = json.dumps(state["schema"])
-        mapping_json = json.dumps(
-            {
-                f["name"]: table._phys(state["column_mapping"], f["name"])
-                for f in state["schema"]["fields"]
-            }
-            if state["column_mapping"]
-            else {}
-        )
-        entries, sizes = [], []
-        for rel, meta in sorted(state["files"].items()):
-            if self._skip(table, state, meta):
-                continue
-            entries.append((rel, tuple(state["dvs"].get(rel, [])), (), "", 0))
-            sizes.append(int(meta.get("bytes", 0)))
+        rels = [
+            rel
+            for rel, meta in sorted(state["files"].items())
+            if not self._skip(table, state, meta)
+        ]
         return _group_file_entries(
-            entries, sizes, store_json, schema_json, mapping_json, self.options
+            table._live_entries(state, rels),
+            [int(state["files"][rel].get("bytes", 0)) for rel in rels],
+            json.dumps(_store_spec(self.path, self.options)),
+            json.dumps(state["schema"]),
+            json.dumps(state["column_mapping"] or {}),
+            self.options,
         )
 
     def read(self, partition):
@@ -483,62 +414,32 @@ def _exclusive_start(options) -> int:
     return int(options.get("afterversion", options.get("startingversion", "0")))
 
 
-def _cdf_tasks(
-    table: SnapshotTable, store_json: str, lo: int, hi: int, options=None
-) -> list:
-    """File-group tasks for the changed files of the commits in (lo, hi]
-    — shared by the streaming source and the batch CDF reader, so both
-    surfaces emit byte-identical change rows. Maintenance commits
-    (dataChange false) contribute nothing, matching SnapshotTable
-    batch CDF. Raises the typed VacuumedVersionError on the DRIVER for
-    a vacuumed range, never as a generic executor task retry."""
-    state = table._state(hi)
+def _cdf_schema_json(state: dict) -> str:
+    """The table schema at ``state`` plus the change-feed tag columns."""
     schema = T.StructType.fromJson(state["schema"])
     for f in _CDF_FIELDS:
         schema = schema.add(f)
-    schema_json = json.dumps(schema.jsonValue())
-    mapping_json = json.dumps(
-        {
-            f["name"]: table._phys(state["column_mapping"], f["name"])
-            for f in state["schema"]["fields"]
-        }
-        if state["column_mapping"]
-        else {}
-    )
-    entries, sizes = [], []
-    for v in table._versions():
-        if not (lo < v <= hi):
-            continue
-        c = table._read_commit(v)
-        if not c.get("dataChange", True):
-            continue
-        prev_files = None
-        for m in c.get("add", []):
-            entries.append((m["path"], (), (), "insert", v))
-            sizes.append(int(m.get("bytes", 0)))
-        for rel in c.get("remove", []):
-            if prev_files is None:
-                prev = table._state(v - 1)
-                prev_files, prev_dvs = prev["files"], prev["dvs"]
-            entries.append((rel, tuple(prev_dvs.get(rel, [])), (), "delete", v))
-            sizes.append(int(prev_files.get(rel, {}).get("bytes", 0)))
-        for e in c.get("dv_add", []):
-            for rel in e["for"]:
-                entries.append((rel, (), tuple(e["paths"]), "delete", v))
-                sizes.append(0)  # emits only the newly-masked rows
-    missing = [
-        p
-        for rel, dv, semi, _, _ in entries
-        for p in (rel, *dv, *semi)
-        if not table._data.exists(p)
+    return json.dumps(schema.jsonValue())
+
+
+def _cdf_tasks(
+    table: SnapshotTable, store_json: str, lo: int, hi: int, options=None
+) -> list:
+    """File-group tasks for the change entries of the commits in (lo, hi]
+    (``SnapshotTable._change_entries``, the list ``read_changes`` reads
+    too) — shared by the streaming source and the batch CDF reader, so
+    every surface emits the same change rows. Raises the typed
+    VacuumedVersionError on the DRIVER for a vacuumed range, never as a
+    generic executor task retry."""
+    state, entries, metas = table._change_entries(lo, hi)
+    # a semi entry emits only its newly-masked rows: charged no bytes
+    sizes = [
+        0 if semi else int(m.get("bytes", 0))
+        for (_, _, semi, _, _), m in zip(entries, metas)
     ]
-    if missing:
-        raise VacuumedVersionError(
-            f"change feed over ({lo}, {hi}] references "
-            f"{len(missing)} vacuumed file(s)"
-        )
     return _group_file_entries(
-        entries, sizes, store_json, schema_json, mapping_json, options
+        entries, sizes, store_json, _cdf_schema_json(state),
+        json.dumps(state["column_mapping"] or {}), options,
     )
 
 
@@ -573,26 +474,14 @@ def _snapshot_recovery_tasks(
     recovery batch both CDF surfaces emit under
     ``onVacuumedStart=snapshot``."""
     state = table._state(version)
-    schema = T.StructType.fromJson(state["schema"])
-    for f in _CDF_FIELDS:
-        schema = schema.add(f)
-    schema_json = json.dumps(schema.jsonValue())
-    mapping_json = json.dumps(
-        {
-            f["name"]: table._phys(state["column_mapping"], f["name"])
-            for f in state["schema"]["fields"]
-        }
-        if state["column_mapping"]
-        else {}
-    )
-    entries, sizes = [], []
-    for rel in sorted(state["files"]):
-        entries.append(
-            (rel, tuple(state["dvs"].get(rel, [])), (), "snapshot", version)
-        )
-        sizes.append(int(state["files"][rel].get("bytes", 0)))
+    rels = sorted(state["files"])
     return _group_file_entries(
-        entries, sizes, store_json, schema_json, mapping_json, options
+        table._live_entries(state, rels, "snapshot", version),
+        [int(state["files"][rel].get("bytes", 0)) for rel in rels],
+        store_json,
+        _cdf_schema_json(state),
+        json.dumps(state["column_mapping"] or {}),
+        options,
     )
 
 

@@ -24,10 +24,15 @@ from pyspark.sql import types as T
 
 # The engine's driver-side row budget: a frame known to hold at most this
 # many rows may be fetched to (or broadcast from) the driver and resolved
-# there. Bounded connected components (operators.graph), the
-# per-distinct broadcast gate (queries.registry) and bounded dv merges
-# (snapshot_table) all size their driver path by it.
+# there. Four driver paths size by it: bounded connected components
+# (operators.graph), the per-distinct broadcast gate (queries.registry),
+# bounded dv merges and bounded snapshot reads (snapshot_table).
 DRIVER_MAX_ROWS = 100_000
+# The driver-side byte budget, in on-disk parquet bytes: a bounded
+# snapshot read also stays within it, and a deletion-vector mask side at
+# most this large is broadcast ((file, row) pairs RLE-compress hard; 32 MiB
+# on disk is roughly a few hundred MB of hash relation).
+DRIVER_MAX_BYTES = 32 << 20
 
 
 def local_df(

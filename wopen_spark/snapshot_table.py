@@ -62,6 +62,7 @@ also pruning on ANY stats column, which hive layouts cannot.
 from __future__ import annotations
 
 import io
+import itertools
 import json
 import logging
 import os
@@ -79,7 +80,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from wopen_spark.localframe import DRIVER_MAX_ROWS, local_df
+from wopen_spark.localframe import DRIVER_MAX_BYTES, DRIVER_MAX_ROWS, local_df
 
 CHECKPOINT_EVERY = 10
 # tries one commit gets before a commuting write gives up on a
@@ -375,6 +376,84 @@ def _file_meta(source, rel_path: str, nbytes: int) -> dict:
         "bytes": nbytes,
         "stats": stats,
     }
+
+
+def _entry_batches(store, entries, schema: T.StructType, mapping: dict | None):
+    """Read data files through the logical ``schema`` with pyarrow, apply
+    deletion-vector masks by row position and tag change rows; yields
+    RecordBatches matching ``schema``. The one file reader of the
+    driver-side snapshot reads and the ``wopen_snapshot`` executor tasks.
+
+    ``entries`` holds one ``(file_rel, dv_rels, semi_rels, change_type,
+    commit_version)`` tuple per data file: ``dv_rels`` are masks whose
+    rows are dropped, ``semi_rels`` masks whose rows are the only ones
+    kept (the rows a dv commit deleted); a ``_change_type`` /
+    ``_commit_version`` field in ``schema`` takes the entry's tag.
+    ``mapping`` is logical -> physical column names. All bytes come
+    through ``store`` (a DataStore: a POSIX handle for local roots, an
+    object GET for s3)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    mapping = mapping or {}
+    target = to_arrow_schema(schema)
+    logical_names = [f.name for f in schema.fields]
+
+    for file_rel, dv_rel, semi_rel, change_type, commit_version in entries:
+        pf = pq.ParquetFile(store.open_input(file_rel))
+        present = set(pf.schema_arrow.names)
+        want_phys = [
+            mapping.get(f.name, f.name)
+            for f in schema.fields
+            if mapping.get(f.name, f.name) in present
+        ]
+        tbl = pf.read(columns=want_phys)
+
+        mask_rows: set[int] | None = None
+        base = os.path.basename(file_rel)
+        for kind, paths in (("anti", dv_rel), ("semi", semi_rel)):
+            if not paths:
+                continue
+            hit: set[int] = set()
+            for p in paths:
+                # row-group/page-predicated read: a mask covering 100
+                # files must not materialize all its rows for every file
+                mt = pq.read_table(
+                    store.open_input(p), filters=[(_DV_FILE, "=", base)]
+                )
+                hit.update(mt.column(_DV_ROW).to_pylist())
+            if kind == "anti":
+                mask_rows = hit if mask_rows is None else mask_rows | hit
+            else:
+                # semi: keep exactly the newly-masked rows
+                keep = hit - (mask_rows or set())
+                sel = sorted(i for i in keep if i < tbl.num_rows)
+                tbl = tbl.take(pa.array(sel, type=pa.int64()))
+                mask_rows = None
+                break
+        if mask_rows:
+            keep = np.ones(tbl.num_rows, dtype=bool)
+            idx = [i for i in mask_rows if i < tbl.num_rows]
+            keep[idx] = False
+            tbl = tbl.filter(pa.array(keep))
+
+        # physical -> logical names, null-fill absent (pre-widening)
+        # columns, cast to the EXACT arrow schema the Spark schema implies
+        out_cols, n = [], tbl.num_rows
+        for f in schema.fields:
+            if f.name in ("_change_type", "_commit_version"):
+                val = change_type if f.name == "_change_type" else commit_version
+                out_cols.append(pa.repeat(val, n))
+                continue
+            p = mapping.get(f.name, f.name)
+            if p in present:
+                out_cols.append(tbl.column(p))
+            else:
+                out_cols.append(pa.nulls(n))
+        result = pa.table(out_cols, names=logical_names).cast(target, safe=False)
+        yield from result.to_batches(max_chunksize=1 << 16)
 
 
 class LogStore:
@@ -2937,14 +3016,6 @@ class SnapshotTable:
 
     # ----------------------------------------------------- deletion vectors
 
-    # Broadcast the dv mask side of merge-on-read anti-joins when its
-    # on-disk parquet is at most this many bytes ((file,row) pairs
-    # RLE-compress hard; 32 MiB on disk is roughly a few hundred MB of
-    # hash relation — comfortably inside a 4g+ executor). Beyond it the
-    # join falls back to shuffle.
-    _DV_BROADCAST_MAX_BYTES = 32 << 20
-
-
     def _dv_frame(self, dv_rels: list[str]) -> DataFrame:
         """Union scan of deletion-vector parquets: (file basename,
         row index) pairs naming masked rows."""
@@ -2991,10 +3062,11 @@ class SnapshotTable:
             # a shuffle anti-join repartitions the ENTIRE masked scan on
             # (file, row) string keys — at 100 TB that shuffle dwarfs the
             # masks themselves. Size gate on on-disk bytes (known from
-            # the data plane, no scan): past it, fall back to the
-            # shuffle join rather than OOM the executors.
+            # the data plane, no scan) against the driver byte budget:
+            # past it, fall back to the shuffle join rather than OOM the
+            # executors.
             dv_bytes = sum(self._data.size(r) for r in dv_rels)
-            if dv_bytes <= self._DV_BROADCAST_MAX_BYTES:
+            if dv_bytes <= DRIVER_MAX_BYTES:
                 dvf = F.broadcast(dvf)
             live = self._read_files(
                 masked, schema_json, mapping, lineage=True
@@ -3265,15 +3337,30 @@ class SnapshotTable:
         finally:
             src.unpersist()
 
-    # Spark types whose values survive Spark -> Arrow -> parquet -> Spark
-    # unchanged, so the driver merge path may write them with pyarrow.
-    # Timestamps (session-zone localization), decimals, binary, nested
-    # and collated strings stay on the Spark writer.
-    _DRIVER_MERGE_TYPES = frozenset(
+    # Spark types whose values survive Spark <-> Arrow <-> parquet
+    # unchanged, so the driver paths may read and write them with
+    # pyarrow. Timestamps (session-zone localization), decimals, binary,
+    # nested and collated strings stay on Spark's reader and writer.
+    _DRIVER_TYPES = frozenset(
         ["tinyint", "smallint", "int", "bigint", "float", "double",
          "string", "boolean", "date"]
     )
     _SRC_ROW = "__sn_src_row"
+
+    def _driver_type_blocker(self, cols) -> str | None:
+        """Why the ``(name, Spark type)`` columns ``cols`` cannot cross a
+        driver path's pyarrow reader or writer (None: they can). The one
+        type check of the bounded merge and the bounded reads."""
+        for name, dt in cols:
+            if dt.simpleString() not in self._DRIVER_TYPES:
+                return f"column {name} of type {dt.simpleString()}"
+            if isinstance(dt, T.DateType) and self.spark.conf.get(
+                "spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED"
+            ) != "CORRECTED":
+                # pyarrow writes proleptic dates with no rebase metadata
+                # and reads them back raw; only CORRECTED agrees
+                return f"date column {name} under a legacy rebase mode"
+        return None
 
     def _driver_merge_blocker(
         self,
@@ -3303,15 +3390,9 @@ class SnapshotTable:
         if first.get("cond") is not None or first.get("values") is not None:
             return "conditional or explicit-value insert"
         src_cols = [(f.name, f.dataType) for f in src_schema.fields]
-        for name, dt in [*src_cols, *types.items()]:
-            if dt.simpleString() not in self._DRIVER_MERGE_TYPES:
-                return f"column {name} of type {dt.simpleString()}"
-            if isinstance(dt, T.DateType) and self.spark.conf.get(
-                "spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED"
-            ) != "CORRECTED":
-                # pyarrow writes proleptic dates with no rebase metadata;
-                # only CORRECTED reads them back as written
-                return f"date column {name} under a legacy rebase mode"
+        why = self._driver_type_blocker([*src_cols, *types.items()])
+        if why is not None:
+            return why
         for k in keys:
             if isinstance(types.get(k), (T.FloatType, T.DoubleType)):
                 return f"floating-point key {k}"
@@ -4034,20 +4115,17 @@ class SnapshotTable:
     def read(self, version: int | None = None, asof_ts: float | None = None) -> DataFrame:
         """Snapshot read; ``version``/``asof_ts`` time-travel. The file
         list is resolved once from the log — concurrent commits cannot
-        change what this DataFrame sees."""
+        change what this DataFrame sees. A snapshot whose files fit the
+        driver budget (``DRIVER_MAX_ROWS`` rows and ``DRIVER_MAX_BYTES``
+        on-disk bytes by the log's counts, every column of a driver type)
+        is read on the driver and returned as a local relation; a larger
+        one is a Spark scan that anti-joins its deletion-vector masks.
+        Raises VacuumedVersionError when the version's files are gone."""
         if asof_ts is not None:
             version = self._version_asof(asof_ts)
         state = self._state(version)
-        referenced = list(state["files"]) + [
-            p for rels in state["dvs"].values() for p in rels
-        ]
-        missing = [r for r in referenced if not self._data.exists(r)]
-        if missing:
-            raise VacuumedVersionError(
-                f"version {state['version']} references {len(missing)} vacuumed "
-                f"file(s); earliest retained version is newer"
-            )
-        return self._read_snapshot(state)
+        self._require_retained(state)
+        return self._public_read("read", state, sorted(state["files"]))
 
     def read_where(
         self, ranges: dict[str, tuple], version: int | None = None
@@ -4057,9 +4135,13 @@ class SnapshotTable:
         intersect every bound are never opened — the same file skipping
         merge/delete use, exposed to readers. The residual filter is
         still applied, so the result is exact regardless of stats.
+        The kept files are read as ``read`` reads a snapshot: on the
+        driver when they fit its budget, where Spark folds the filter
+        into the local relation and a ``collect()`` runs no job.
         Returns (DataFrame, report) — the report says what was skipped,
         because a silent cap looks like full coverage."""
         state = self._state(version)
+        self._require_retained(state)
         keep, skipped, bloom_skipped = [], 0, 0
         for rel, meta in state["files"].items():
             why = self._refuted_by(state, meta, ranges)
@@ -4068,7 +4150,7 @@ class SnapshotTable:
             else:
                 skipped += 1
                 bloom_skipped += why == "bloom"
-        df = self._read_snapshot(state, keep)
+        df = self._public_read("read_where", state, sorted(keep))
         for c, (lo, hi) in ranges.items():
             if lo is not None:
                 df = df.filter(F.col(c) >= F.lit(lo))
@@ -4080,6 +4162,139 @@ class SnapshotTable:
             "files_skipped_by_stats": skipped - bloom_skipped,
             "files_skipped_by_bloom": bloom_skipped,
         }
+
+    def _require_retained(self, state: dict) -> None:
+        """Raise VacuumedVersionError when a data or mask file of
+        ``state`` is gone: the one vacuum check of the snapshot reads,
+        made before any file (or bloom sidecar) is opened."""
+        referenced = list(state["files"]) + [
+            p for rels in state["dvs"].values() for p in rels
+        ]
+        missing = [r for r in referenced if not self._data.exists(r)]
+        if missing:
+            raise VacuumedVersionError(
+                f"version {state['version']} references {len(missing)} vacuumed "
+                f"file(s); earliest retained version is newer"
+            )
+
+    @staticmethod
+    def _live_entries(
+        state: dict, rels: list[str], change_type: str = "", version: int = 0
+    ) -> list[tuple]:
+        """Reader entries (see ``_entry_batches``) for the live rows of
+        the data files ``rels`` at ``state``: each file with its masks."""
+        return [
+            (rel, tuple(state["dvs"].get(rel, [])), (), change_type, version)
+            for rel in rels
+        ]
+
+    def _change_entries(self, lo: int, hi: int) -> tuple[dict, list[tuple], list[dict]]:
+        """The change feed of the commits in ``(lo, hi]`` as reader
+        entries (see ``_entry_batches``), in commit order: a commit's
+        added files as ``insert``, its removed files as ``delete``
+        through their masks as of the commit before, and the rows its
+        deletion vectors masked as ``delete``. Maintenance commits
+        (``dataChange: false``) contribute nothing. Returns (state at
+        ``hi``, entries, the log metadata of each entry's data file);
+        raises VacuumedVersionError when a file the feed needs is gone."""
+        state = self._state(hi)
+        known = dict(state["files"])  # file metadata never changes
+        entries: list[tuple] = []
+        metas: list[dict] = []
+        for v in self._versions():
+            if not (lo < v <= hi):
+                continue
+            c = self._read_commit(v)
+            if not c.get("dataChange", True):
+                continue
+            for m in c.get("add", []):
+                entries.append((m["path"], (), (), "insert", v))
+                metas.append(m)
+            prev_dvs = None
+            for rel in c.get("remove", []):
+                # a removed file's rows were live MINUS its masks as of
+                # v-1 — dv-deleted rows were already emitted as deletes
+                # by their own dv commit
+                if prev_dvs is None:
+                    prev = self._state(v - 1)
+                    prev_dvs = prev["dvs"]
+                    known.update(prev["files"])
+                entries.append((rel, tuple(prev_dvs.get(rel, [])), (), "delete", v))
+                metas.append(known.get(rel, {}))
+            for e in c.get("dv_add", []):
+                # exactly the NEW masks' rows (stacked older masks cannot
+                # overlap — the scan that produced this mask was itself
+                # dv-applied)
+                if any(rel not in known for rel in e["for"]):
+                    known.update(self._state(v)["files"])
+                for rel in e["for"]:
+                    entries.append((rel, (), tuple(e["paths"]), "delete", v))
+                    metas.append(known.get(rel, {}))
+        missing = {
+            p
+            for rel, dv, semi, _, _ in entries
+            for p in (rel, *dv, *semi)
+            if not self._data.exists(p)
+        }
+        if missing:
+            raise VacuumedVersionError(
+                f"change feed over ({lo}, {hi}] references "
+                f"{len(missing)} vacuumed file(s)"
+            )
+        return state, entries, metas
+
+    def _on_driver(self, op: str, schema: T.StructType, metas: list[dict]) -> bool:
+        """Whether the public read ``op`` of the data files ``metas``
+        (their log metadata) resolves on the driver: the log's row and
+        byte counts fit ``DRIVER_MAX_ROWS`` and ``DRIVER_MAX_BYTES`` and
+        every column is of a driver type. Answered with no job; the
+        decision is logged on ``wopen_spark.snapshot_table``."""
+        why = self._driver_type_blocker((f.name, f.dataType) for f in schema.fields)
+        rows = nbytes = 0
+        if why is None:
+            if any("rows" not in m or "bytes" not in m for m in metas):
+                why = "a file without row or byte counts"
+            else:
+                rows = sum(m["rows"] for m in metas)
+                nbytes = sum(m["bytes"] for m in metas)
+                if rows > DRIVER_MAX_ROWS:
+                    why = f"{rows} rows above {DRIVER_MAX_ROWS}"
+                elif nbytes > DRIVER_MAX_BYTES:
+                    why = f"{nbytes} bytes above {DRIVER_MAX_BYTES}"
+        if why is not None:
+            _log.debug("%s %s: distributed path (%s)", op, self.path, why)
+            return False
+        _log.debug(
+            "%s %s: driver path (%d rows, %d bytes)", op, self.path, rows, nbytes
+        )
+        return True
+
+    def _driver_frame(
+        self, schema: T.StructType, entries: list[tuple], mapping: dict | None
+    ) -> DataFrame:
+        """The rows of reader ``entries`` read on the driver, as a local
+        relation of ``schema`` with every column nullable, as a Spark
+        file scan returns it."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema.fields]
+        )
+        batches = _entry_batches(self._data, entries, schema, mapping)
+        table = pa.Table.from_batches(list(batches), schema=to_arrow_schema(schema))
+        return self.spark.createDataFrame(table, schema)
+
+    def _public_read(self, op: str, state: dict, rels: list[str]) -> DataFrame:
+        """The live rows of the data files ``rels`` at ``state`` for the
+        public read ``op``: on the driver within its budget, else the
+        Spark scan with the mask anti-join."""
+        schema = T.StructType.fromJson(state["schema"])
+        if self._on_driver(op, schema, [state["files"][r] for r in rels]):
+            return self._driver_frame(
+                schema, self._live_entries(state, rels), state["column_mapping"]
+            )
+        return self._read_snapshot(state, rels)
 
     def _refuted_by(self, state: dict, meta: dict, ranges: dict) -> str | None:
         """Why the file ``meta`` cannot hold a row inside every
@@ -4154,79 +4369,51 @@ class SnapshotTable:
 
         This is how an incremental pipeline consumes the table without
         rescanning it: O(files changed in the range), never O(table).
-        Requires the range's files to not be vacuumed."""
+        The rows come from the same entry list the ``wopen_snapshot``
+        change feed reads (``_change_entries``); when the range's files
+        fit the driver budget, as ``read`` sizes it, they are read on the
+        driver and returned as a local relation. Requires the range's
+        files to not be vacuumed."""
         head = self.latest_version()
         to_version = head if to_version is None else to_version
         if from_version > to_version:
             raise ValueError(f"empty change range ({from_version}, {to_version}]")
-        state = self._state(to_version)  # latest schema covers all files
-        schema = state["schema"]
+        state, entries, metas = self._change_entries(from_version, to_version)
+        schema = state["schema"]  # the latest schema covers all files
         mapping = state["column_mapping"]
+        out_schema = T.StructType.fromJson(schema)
+        on_driver = self._on_driver("read_changes", out_schema, metas)
+        out_schema.add("_change_type", T.StringType()).add(
+            "_commit_version", T.IntegerType()
+        )
+        if on_driver:
+            return self._driver_frame(out_schema, entries, mapping)
         parts: list[DataFrame] = []
-        for v in self._versions():
-            if not (from_version < v <= to_version):
-                continue
-            c = self._read_commit(v)
-            if not c.get("dataChange", True):
-                continue  # compact/zorder: same logical rows, no changes
-            prev_dvs: dict[str, list[str]] | None = None
-            for change_type, rels in (
-                ("insert", [m["path"] for m in c.get("add", [])]),
-                ("delete", c.get("remove", [])),
-            ):
-                missing = [r for r in rels if not self._data.exists(r)]
-                if missing:
-                    raise VacuumedVersionError(
-                        f"change feed for version {v} references "
-                        f"{len(missing)} vacuumed file(s)"
-                    )
-                if not rels:
-                    continue
-                if change_type == "delete":
-                    # a removed file's rows were live MINUS its masks as
-                    # of v-1 — dv-deleted rows were already emitted as
-                    # deletes by their own dv commit
-                    if prev_dvs is None:
-                        prev_dvs = self._state(v - 1)["dvs"]
-                    df = self._read_snapshot(
-                        {"files": {}, "column_mapping": mapping},
-                        rels,
-                        schema_json=schema,
-                        dvs=prev_dvs,
-                    )
-                else:
-                    df = self._read_files(rels, schema, mapping)
-                parts.append(
-                    df.withColumn("_change_type", F.lit(change_type))
-                    .withColumn("_commit_version", F.lit(v))
-                )
-            for e in c.get("dv_add", []):
-                # the rows a dv commit masked: its data files semi-joined
-                # with exactly the NEW masks (stacked older masks cannot
-                # overlap — the dv scan that produced this mask was
-                # itself dv-applied)
-                needed = e["paths"] + e["for"]
-                missing = [r for r in needed if not self._data.exists(r)]
-                if missing:
-                    raise VacuumedVersionError(
-                        f"change feed for version {v} references "
-                        f"{len(missing)} vacuumed file(s)"
-                    )
-                masked = (
-                    self._read_files(e["for"], schema, mapping, lineage=True)
-                    .join(self._dv_frame(e["paths"]), [_DV_FILE, _DV_ROW], "left_semi")
+        # one scan per (commit, change type, mask set) run of entries
+        for (change_type, v, semi), run in itertools.groupby(
+            entries, key=lambda e: (e[3], e[4], e[2])
+        ):
+            run = list(run)
+            rels = [e[0] for e in run]
+            if semi:
+                df = (
+                    self._read_files(rels, schema, mapping, lineage=True)
+                    .join(self._dv_frame(list(semi)), [_DV_FILE, _DV_ROW], "left_semi")
                     .drop(_DV_FILE, _DV_ROW)
                 )
-                parts.append(
-                    masked.withColumn("_change_type", F.lit("delete"))
-                    .withColumn("_commit_version", F.lit(v))
+            else:
+                df = self._read_snapshot(
+                    {"files": {}, "column_mapping": mapping},
+                    rels,
+                    schema_json=schema,
+                    dvs={e[0]: list(e[1]) for e in run},
                 )
-        if not parts:
-            base = T.StructType.fromJson(schema)
-            base = base.add("_change_type", T.StringType()).add(
-                "_commit_version", T.IntegerType()
+            parts.append(
+                df.withColumn("_change_type", F.lit(change_type))
+                .withColumn("_commit_version", F.lit(v))
             )
-            return local_df(self.spark, [], base)
+        if not parts:
+            return local_df(self.spark, [], out_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
