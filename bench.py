@@ -9,9 +9,11 @@ not row-at-a-time pickling; row-Row collect() is the fallback for any
 plan Arrow can't carry. The measurement covers the full plan, not just
 plan construction.
 
-BENCH_FULL.json holds every query's wall seconds (``queries``) and the
-number of Spark jobs its cell ran (``jobs``, read from the status store
-for the cell's job group; ``total_jobs`` is their sum).
+BENCH_FULL.json holds every query's wall seconds (``queries``) and what
+its cell ran, counted after the cell's clock stops from the status
+tracker for the cell's job group: Spark jobs (``jobs``; ``total_jobs`` is
+their sum), the stages that ran a task (``stages``; stages the scheduler
+skipped are not counted) and those stages' tasks (``tasks``).
 """
 
 from __future__ import annotations
@@ -23,6 +25,29 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from wopen_spark.plans import JobGroupRun, run_in_job_group  # noqa: E402
+
+
+def run_cell(spark, name: str, fn, sf_dir: str) -> tuple[float, JobGroupRun]:
+    """One bench cell: build query ``name`` and materialize it on the
+    driver in a job group of its own. Returns its wall seconds (-1.0 on
+    error) and what the group ran, counted after the clock stops."""
+
+    def timed() -> float:
+        t0 = time.perf_counter()
+        try:
+            df = fn(spark, sf_dir)
+            try:
+                _ = len(df.toPandas())
+            except Exception:  # noqa: BLE001 — Arrow-incompatible result
+                _ = len(df.collect())
+            return round(time.perf_counter() - t0, 3)
+        except Exception as e:  # noqa: BLE001
+            print(f"bench error in {name}: {e}", file=sys.stderr)
+            return -1.0
+
+    return run_in_job_group(spark, name, timed)
 
 
 def main() -> None:
@@ -59,38 +84,20 @@ def main() -> None:
             except Exception:  # noqa: BLE001 — warmup is best-effort
                 pass
 
-    sc = spark.sparkContext
     timings: dict[str, float] = {}
     jobs: dict[str, int] = {}
+    stages: dict[str, int] = {}
+    tasks: dict[str, int] = {}
     for name, fn in qs.items():
-        # each cell runs in its own job group, so its Spark job count is
-        # read back from the status store (the unit of fixed cost here)
-        group = f"bench-{name}"
-        sc.setJobGroup(group, name)
-        t0 = time.perf_counter()
-        try:
-            df = fn(spark, sf_dir)
-            try:
-                _ = len(df.toPandas())
-            except Exception:  # noqa: BLE001 — Arrow-incompatible result
-                _ = len(df.collect())
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as e:  # noqa: BLE001
-            print(f"bench error in {name}: {e}", file=sys.stderr)
-            timings[name] = -1.0
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
-            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
-        if timings[name] < 0:
-            continue
-        # drop the query's py4j refs NOW: JVM blocks (localCheckpoints,
-        # per-query persists) stay pinned until Python GC releases the
-        # proxy objects, and CPython's lazy collection let ~100 queries
-        # of sf10 checkpoint blocks accumulate until the ContextCleaner
-        # itself OOM'd the 8g heap mid-suite (r7). Cost: ~ms per query.
-        del df
+        timings[name], ran = run_cell(spark, name, fn, sf_dir)
+        jobs[name], stages[name] = len(ran.jobs), len(ran.stages)
+        tasks[name] = ran.tasks
+        # the cell's frame went out of scope when run_cell returned; collect
+        # its py4j refs NOW: JVM blocks (localCheckpoints, per-query
+        # persists) stay pinned until Python GC releases the proxy objects,
+        # and CPython's lazy collection let ~100 queries of sf10 checkpoint
+        # blocks accumulate until the ContextCleaner itself OOM'd the 8g
+        # heap mid-suite (r7). Cost: ~ms per query.
         gc.collect()
 
     total = round(sum(v for v in timings.values() if v >= 0), 3)
@@ -114,6 +121,8 @@ def main() -> None:
                     "queries": timings,
                     "total_jobs": sum(jobs.values()),
                     "jobs": jobs,
+                    "stages": stages,
+                    "tasks": tasks,
                 },
                 f,
                 indent=1,

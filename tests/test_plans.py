@@ -13,6 +13,7 @@ from wopen_spark.plans import (
     join_strategies,
     plan_string,
     pushed_filters,
+    run_in_job_group,
     scan_schemas,
 )
 
@@ -1051,21 +1052,6 @@ def test_footer_row_bound_fast_path(spark):
     assert registry._footer_row_bound(joined) is None
 
 
-def _jobs_in_group(spark, group: str, fn):
-    """Run ``fn()`` under Spark job group ``group``; return its result
-    and the ids of the jobs the group ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job events reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_gate_small_decides_without_count_job(spark):
     """When the footer bound already clears the threshold, the gate must
     not run a count job — the r6 fast path. A row-increasing frame, which
@@ -1076,13 +1062,13 @@ def test_gate_small_decides_without_count_job(spark):
 
     d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     dk = d.select("text").distinct()
-    small, jobs = _jobs_in_group(
+    small, (jobs, _, _) = run_in_job_group(
         spark, "gate-small-footer", lambda: registry._gate_small(dk)
     )
     assert small is True
     assert jobs == []
     words = d.select(F.explode(F.split("text", " ")).alias("w")).distinct()
-    small, jobs = _jobs_in_group(
+    small, (jobs, _, _) = run_in_job_group(
         spark, "gate-small-counted", lambda: registry._gate_small(words)
     )
     assert small is True
@@ -1097,11 +1083,11 @@ def test_t_single_file_runs_no_job(spark):
     from wopen_spark.tables import TESTDATA_TABLES
 
     for name in TESTDATA_TABLES:
-        _, jobs = _jobs_in_group(
+        _, (jobs, _, _) = run_in_job_group(
             spark, f"t-footer-{name}", lambda: _t(spark, SF_SMOKE, name)
         )
         assert jobs == [], name
-    _, jobs = _jobs_in_group(
+    _, (jobs, _, _) = run_in_job_group(
         spark,
         "t-inferred",
         lambda: spark.read.parquet(f"{SF_SMOKE}/documents.parquet"),
@@ -1190,11 +1176,11 @@ def test_connected_components_bounded_graph_runs_one_job(spark):
     edges = spark.createDataFrame(
         [(5, 3), (3, 9), (9, 7), (20, 21)], "id_a long, id_b long"
     ).localCheckpoint()
-    comps, jobs = _jobs_in_group(
+    comps, (jobs, _, _) = run_in_job_group(
         spark, "cc-driver", lambda: connected_components(edges)
     )
     assert len(jobs) == 1
-    rows, jobs = _jobs_in_group(spark, "cc-driver-read", comps.collect)
+    rows, (jobs, _, _) = run_in_job_group(spark, "cc-driver-read", comps.collect)
     assert jobs == []
     assert {tuple(r) for r in rows} == {
         (3, 3), (5, 3), (7, 3), (9, 3), (20, 20), (21, 20),
@@ -1207,7 +1193,7 @@ def test_load_testdata_runs_no_job(spark):
     schema Spark infers (no ``_t``-style ts conversion)."""
     from wopen_spark.tables import TESTDATA_TABLES, load_testdata
 
-    views, jobs = _jobs_in_group(
+    views, (jobs, _, _) = run_in_job_group(
         spark, "load-testdata", lambda: load_testdata(spark, SF_SMOKE)
     )
     assert jobs == []
@@ -1247,7 +1233,9 @@ def test_bounded_dv_upsert_run_once_jobs(spark, tmp_path):
                 for i in range(100)
             ],
         )
-        _, jobs = _jobs_in_group(spark, f"upsert-{it}", lambda: loader.run_once(spark))
+        _, (jobs, _, _) = run_in_job_group(
+            spark, f"upsert-{it}", lambda: loader.run_once(spark)
+        )
         counts.append(len(jobs))
         commit = table._read_commit(table.latest_version())
         assert len(commit["add"]) == 1
@@ -1291,15 +1279,42 @@ def test_bounded_snapshot_reads_run_at_most_one_job(spark, tmp_path, monkeypatch
         pdf = table.read_changes(v0, v1).toPandas()
         return sorted(pdf.itertuples(index=False, name=None))
 
-    rows, jobs = _jobs_in_group(spark, "point-read", point)
+    rows, (jobs, _, _) = run_in_job_group(spark, "point-read", point)
     assert rows == [(700, 1, 2.0, "y")] and jobs == [], jobs
-    feed, jobs = _jobs_in_group(spark, "change-read", changes)
+    feed, (jobs, _, _) = run_in_job_group(spark, "change-read", changes)
     assert len(jobs) <= 1, jobs
     monkeypatch.setattr(st, "DRIVER_MAX_ROWS", 1)
-    scanned, jobs = _jobs_in_group(spark, "point-scan", point)
+    scanned, (jobs, _, _) = run_in_job_group(spark, "point-scan", point)
     assert scanned == rows and jobs, jobs
-    scanned, jobs = _jobs_in_group(spark, "change-scan", changes)
+    scanned, (jobs, _, _) = run_in_job_group(spark, "change-scan", changes)
     assert scanned == feed and jobs, jobs
+
+
+def test_bench_cell_counts_match_tracer(spark):
+    """bench.py's per-cell counters agree with the benchmark tracer: the
+    stages and tasks a cell's job group ran equal the tracer's
+    ``n_stages`` and ``tasks`` for a span around the same call. The
+    aggregate's result job lists the shuffle map stage its map-stage job
+    already ran; the scheduler skips it there and neither side counts it
+    twice."""
+    import time
+
+    import bench
+    from perfbench.spans import Tracer
+    from wopen_spark.queries import QUERIES
+
+    tracer = Tracer(spark, True)
+    start = time.time() * 1000.0
+    with tracer.span("pricing_summary"):
+        secs, ran = bench.run_cell(
+            spark, "pricing_summary", QUERIES["pricing_summary"], SF_SMOKE
+        )
+    tracer.harvest((start, time.time() * 1000.0))
+    (span,) = tracer.spans
+    assert secs >= 0
+    assert ran.jobs
+    assert ran.tasks >= len(ran.stages) >= 1
+    assert (len(ran.stages), ran.tasks) == (span["n_stages"], span["tasks"])
 
 
 def test_gate_small_sees_rewritten_files(spark, tmp_path, monkeypatch):

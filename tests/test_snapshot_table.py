@@ -331,10 +331,8 @@ def test_zorder_tightens_stats_on_both_columns(spark, table):
         assert sum(1 for w in widths if w > 60) <= 2, (widths_x, widths_y)
     # and stats pruning now works on EITHER column: a narrow key range
     # on x alone (and on y alone) each skips most files
-    key_x = spark.createDataFrame([(1,)], "x long")
-    cand_x, skip_x = table._candidate_files(state, ["x"], key_x)
-    key_y = spark.createDataFrame([(1,)], "y long")
-    cand_y, skip_y = table._candidate_files(state, ["y"], key_y)
+    cand_x, skip_x = table._candidate_files(state, {"x": (1, 1)})
+    cand_y, skip_y = table._candidate_files(state, {"y": (1, 1)})
     assert len(skip_x) >= len(state["files"]) // 2
     assert len(skip_y) >= len(state["files"]) // 2
     # contents unchanged by the rewrite
@@ -410,8 +408,8 @@ def test_timestamp_keys_never_stats_skipped(spark, table):
     )
     table.create(df.coalesce(2))
     state = table._state()
-    keys = spark.sql("SELECT timestamp'2024-01-01 00:00:05' AS ts")
-    cands, skipped = table._candidate_files(state, ["ts"], keys)
+    (ts,) = spark.sql("SELECT timestamp'2024-01-01 00:00:05' AS ts").first()
+    cands, skipped = table._candidate_files(state, {"ts": (ts, ts)})
     assert skipped == [] and len(cands) == len(state["files"])
 
 
@@ -1237,3 +1235,30 @@ def test_optimize_where_scopes_compaction(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="BETWEEN"):
         execute_sql(spark, "OPTIMIZE t WHERE id > 5", tables={"t": t})
+
+
+def test_optimize_where_quoted_bounds_on_numeric_column(spark, tmp_path):
+    """OPTIMIZE ... WHERE with quoted literals on a bigint column uses the
+    snapshot reads' skip predicate: a string bound is not compared with
+    numeric stats, so every file stays in scope and the pass commits, as
+    a ``read_where`` with the same quoted bounds reads every file."""
+    from wopen_spark.snapshot_table import SnapshotTable
+    from wopen_spark.sql_dml import execute_sql
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.create(
+        spark.range(0, 1000)
+        .selectExpr("id", "id * 2 AS v")
+        .repartitionByRange(10, "id"),
+        cluster_by=["id"],
+    )
+    got, report = t.read_where({"id": ("5", "5")})
+    assert [tuple(r) for r in got.collect()] == [(5, 10)]
+    assert report["files_read"] == 10
+    rep = execute_sql(
+        spark, "OPTIMIZE t WHERE id BETWEEN '0' AND '299'", tables={"t": t}
+    )
+    assert not rep["noop"]
+    assert rep["files_in_scope"] == rep["files_selected"] == 10
+    assert len(t._state()["files"]) == rep["files_after"] < 10
+    assert t.read().count() == 1000

@@ -1,44 +1,45 @@
-"""Compare a fresh bench.py JSON line against a regression base's
-markdown cell table: prints total movement and any per-query movers
-beyond a ratio threshold (default 2x), ignoring sub-second cells where
-ratios are noise.
+"""Compare two bench.py BENCH_FULL.json files, parent then change.
 
-Usage: python tools/compare_bench.py BENCH_SF01.md fresh.json [--ratio 2]
-The markdown table rows are ``| query | sec |``; the JSON is bench.py's
-single line (``{"queries": {...}}``).
+First lists every cell whose Spark counters (``jobs``, ``stages``,
+``tasks``) differ: they are deterministic for the same inputs and code,
+so any difference is a change in what the cell runs. Only the counters
+both files carry are compared. Then lists the wall-time movers beyond a
+ratio threshold (default 2x), ignoring sub-second cells where ratios are
+noise.
+
+Usage: python tools/compare_bench.py parent/BENCH_FULL.json change/BENCH_FULL.json [--ratio 2]
 """
 from __future__ import annotations
 
 import json
-import re
 import sys
 
-
-def parse_base(path: str) -> dict[str, float]:
-    out: dict[str, float] = {}
-    for line in open(path):
-        m = re.match(r"^\|\s*([A-Za-z_]\w*)\s*\|\s*([0-9.]+)\s*\|\s*$", line)
-        if m:
-            # keep the FIRST occurrence (the main campaign table);
-            # later isolated-run sections re-list a few cells
-            out.setdefault(m.group(1), float(m.group(2)))
-    return out
+COUNTERS = ("jobs", "stages", "tasks")
 
 
 def main() -> None:
-    base_path, fresh_path = sys.argv[1], sys.argv[2]
+    base_doc = json.load(open(sys.argv[1]))
+    fresh_doc = json.load(open(sys.argv[2]))
     ratio = 2.0
     if "--ratio" in sys.argv:
         ratio = float(sys.argv[sys.argv.index("--ratio") + 1])
-    base = parse_base(base_path)
-    fresh_doc = json.loads(open(fresh_path).read())
-    fresh = fresh_doc["queries"] if "queries" in fresh_doc else fresh_doc
+    base, fresh = base_doc["queries"], fresh_doc["queries"]
     common = sorted(set(base) & set(fresh))
+    counters = [c for c in COUNTERS if c in base_doc and c in fresh_doc]
+    counter_diffs = []
+    for q in common:
+        diff = {
+            c: [base_doc[c].get(q), fresh_doc[c].get(q)]
+            for c in counters
+            if base_doc[c].get(q) != fresh_doc[c].get(q)
+        }
+        if diff:
+            counter_diffs.append(dict(query=q, **diff))
     movers = []
     for q in common:
         b, f = base[q], fresh[q]
         if min(b, f) < 1.0:
-            continue  # sub-second cells: ratio is noise
+            continue  # sub-second (or failed, -1.0) cells: ratio is noise
         r = f / b
         if r >= ratio or r <= 1 / ratio:
             movers.append((r, q, b, f))
@@ -46,6 +47,8 @@ def main() -> None:
         json.dumps(
             {
                 "common_cells": len(common),
+                "counters_compared": counters,
+                "counter_diffs": counter_diffs,
                 "base_total_common": round(sum(base[q] for q in common), 1),
                 "fresh_total_common": round(sum(fresh[q] for q in common), 1),
                 "new_cells": sorted(set(fresh) - set(base)),

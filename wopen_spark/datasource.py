@@ -262,16 +262,15 @@ def _group_file_entries(
 ) -> list["_FileTask"]:
     """Pack per-file entries into _FileTask groups by Spark's split
     formula: target = min(maxPartitionBytes, max(openCost,
-    (total bytes + n*openCost) / minTasks)). Options ``maxBytesPerTask``
-    / ``minTasks`` override the defaults per read. The plan worker has
-    no SparkSession, so the minTasks default (Spark's
-    ``leafNodeDefaultParallelism``) is the session factory's core count."""
+    (total bytes + n*openCost) / minTasks)). The read option ``minTasks``
+    overrides the minTasks default per read. The plan worker has no
+    SparkSession, so that default (Spark's ``leafNodeDefaultParallelism``)
+    is the session factory's core count."""
     opts = options or {}
-    max_bytes = int(opts.get("maxbytespertask", _MAX_TASK_BYTES))
     min_tasks = int(opts.get("mintasks", default_cpus()))
     charged = [s + _OPEN_COST_BYTES for s in sizes]
     target = min(
-        max_bytes, max(_OPEN_COST_BYTES, sum(charged) // max(1, min_tasks))
+        _MAX_TASK_BYTES, max(_OPEN_COST_BYTES, sum(charged) // max(1, min_tasks))
     )
     out: list[_FileTask] = []
     group: list[tuple] = []

@@ -7,13 +7,19 @@ join where a broadcast was possible adds a full shuffle of the fact
 table. These helpers extract the load-bearing facts from the executed
 plan so tests can pin them (tests/test_plans.py) and regressions show up
 as assertion failures, not as a 100x slowdown in production.
+
+``run_in_job_group`` counts what a call ran instead: its Spark jobs,
+stages and tasks, the fixed cost a plan alone does not show. bench.py
+records every cell through it.
 """
 
 from __future__ import annotations
 
 import re
+import uuid
+from typing import Any, Callable, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def plan_string(df: DataFrame) -> str:
@@ -77,3 +83,50 @@ def exchanges(df: DataFrame) -> list[str]:
         if m.group(1) == "Exchange":
             shuffles.append(m.group(0))
     return shuffles
+
+
+class JobGroupRun(NamedTuple):
+    """What one job group ran: its job ids, the ids of the stages that
+    ran a task (a stage the scheduler skipped because its shuffle output
+    already existed ran none and is not counted), and the tasks that
+    completed or failed in those stages."""
+
+    jobs: list[int]
+    stages: list[int]
+    tasks: int
+
+
+def run_in_job_group(
+    spark: SparkSession, name: str, fn: Callable[[], Any]
+) -> tuple[Any, JobGroupRun]:
+    """Run ``fn()`` in a fresh Spark job group described as ``name``;
+    return its result and what the group ran. Only the group's own jobs
+    and stages are read from the status tracker, so the cost scales with
+    the call, not with the status store. Jobs submitted from other
+    threads, such as a streaming query's micro-batches, run outside the
+    group and are not counted."""
+    sc = spark.sparkContext
+    group = f"{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    listed: set[int] = set()
+    for job in jobs:
+        info = tracker.getJobInfo(job)
+        if info is not None:
+            listed.update(info.stageIds)
+    stages, tasks = [], 0
+    for sid in sorted(listed):
+        info = tracker.getStageInfo(sid)
+        ran = 0 if info is None else info.numCompletedTasks + info.numFailedTasks
+        if ran:
+            stages.append(sid)
+            tasks += ran
+    return out, JobGroupRun(jobs, stages, tasks)

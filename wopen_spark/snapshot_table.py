@@ -2918,47 +2918,19 @@ class SnapshotTable:
         return {c for c in cols if types.get(c) in self._PRUNABLE_TYPES}
 
     def _candidate_files(
-        self,
-        state: dict,
-        keys: list[str],
-        key_df: DataFrame | None = None,
-        bounds: dict | None = None,
+        self, state: dict, bounds: dict
     ) -> tuple[list[str], list[str]]:
-        """Stats pruning: files whose per-column [min,max] ranges overlap
-        the incoming keys' ranges. Returns (candidates, skipped). Only
-        types with a faithful footer-vs-engine comparator participate —
-        a wrong skip here is silent merge corruption, so anything
-        doubtful (timestamps, binary) is simply never skipped. Footer
-        stats are keyed by PHYSICAL column names.
-
-        The incoming key ranges come either from ``bounds`` (column ->
-        (min, max), already computed by a caller that folded the
-        aggregate into another job — min/max over the raw batch equals
-        min/max over its distinct keys) or, when only ``key_df`` is
-        given, from one aggregate job over it."""
-        prunable = self._prunable_cols(state, keys)
-        mapping = state["column_mapping"]
-        if bounds is None:
-            row = key_df.agg(
-                *[F.min(k).alias(f"mn_{k}") for k in keys],
-                *[F.max(k).alias(f"mx_{k}") for k in keys],
-            ).collect()[0]
-            bounds = {k: (row[f"mn_{k}"], row[f"mx_{k}"]) for k in keys}
+        """Merge pruning: the files ``_refuted_by`` (the skip predicate of
+        the snapshot reads) does not refute for the incoming keys'
+        ranges ``bounds`` (column -> (min, max); min/max over the raw
+        batch equals min/max over its distinct keys). Returns
+        (candidates, skipped). A wrong skip here is silent merge
+        corruption, so only the comparisons ``_refuted_by`` trusts skip a
+        file."""
         candidates, skipped = [], []
         for rel, meta in state["files"].items():
-            overlap = True
-            for k in keys:
-                if k not in prunable:
-                    continue
-                s = meta.get("stats", {}).get(self._phys(mapping, k))
-                mn, mx = bounds[k]
-                if s is None or s["min"] is None or mn is None:
-                    continue  # no stats -> cannot skip
-                mn, mx = _json_safe(mn), _json_safe(mx)
-                if s["max"] < mn or s["min"] > mx:
-                    overlap = False
-                    break
-            (candidates if overlap else skipped).append(rel)
+            refuted = self._refuted_by(state, meta, bounds)
+            (candidates if refuted is None else skipped).append(rel)
         return candidates, skipped
 
     def _read_files(
@@ -3432,7 +3404,7 @@ class SnapshotTable:
         for k in keys:
             mm = pc.min_max(fetched.column(k)).as_py() if n_src else {}
             bounds[k] = (mm.get("min"), mm.get("max"))
-        cand, skipped = self._candidate_files(state, keys, bounds=bounds)
+        cand, skipped = self._candidate_files(state, bounds)
         arrow_schema = pa.schema(
             [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
         )
@@ -3663,7 +3635,7 @@ class SnapshotTable:
             bounds = {
                 k: (got[f"mn_{i}"], got[f"mx_{i}"]) for i, k in enumerate(keys)
             }
-            cand, skipped = self._candidate_files(state, keys, bounds=bounds)
+            cand, skipped = self._candidate_files(state, bounds)
 
         # ---- classify target-side rows: first-matching clause wins
         # Without matched clauses the target side needs the source ONLY
@@ -4165,8 +4137,8 @@ class SnapshotTable:
 
     def _require_retained(self, state: dict) -> None:
         """Raise VacuumedVersionError when a data or mask file of
-        ``state`` is gone: the one vacuum check of the snapshot reads,
-        made before any file (or bloom sidecar) is opened."""
+        ``state`` is gone: the one vacuum check of the snapshot reads and
+        ``restore``, made before any file (or bloom sidecar) is opened."""
         referenced = list(state["files"]) + [
             p for rels in state["dvs"].values() for p in rels
         ]
@@ -4301,9 +4273,10 @@ class SnapshotTable:
         ``ranges`` bound (column -> (lo, hi), either side None for open):
         ``"stats"`` when its footer min/max excludes a bound, ``"bloom"``
         when its bloom sidecar refutes a point probe (lo == hi), None
-        when it must be read. The one skip predicate of ``read_where``
-        and the ``wopen_snapshot`` pushdown reader, so both skip the
-        same files.
+        when it must be read. The one skip predicate of ``read_where``,
+        the ``wopen_snapshot`` pushdown reader, merge pruning
+        (``_candidate_files``) and ``optimize_small_files``' WHERE
+        scope, so all of them skip the same files.
 
         A bound is compared with a stat only within one type family
         (number with number, string with string, bool with bool): Spark
@@ -4452,18 +4425,7 @@ class SnapshotTable:
                     f"which constraint/generation rule(s) {sorted(set(refs))} "
                     f"reference; drop them first"
                 )
-        missing = [r for r in old["files"] if not self._data.exists(r)]
-        missing += [
-            r
-            for rels in old["dvs"].values()
-            for r in rels
-            if not self._data.exists(r)
-        ]
-        if missing:
-            raise VacuumedVersionError(
-                f"restore to version {version} references {len(missing)} "
-                f"vacuumed file(s)"
-            )
+        self._require_retained(old)
         dv_add = [
             {"paths": rels, "for": [rel]}  # no "rows": original dv row
             for rel, rels in sorted(old["dvs"].items())  # counts are not
@@ -4568,48 +4530,32 @@ class SnapshotTable:
     def optimize_small_files(
         self,
         max_file_bytes: int = 128 << 20,
-        target_file_bytes: int | None = None,
         where_ranges: dict | None = None,
     ) -> dict:
         """Incremental bin-packing — the compaction that actually runs at
         100 TB, where ``compact()``'s full-table rewrite is impossible.
         Selects only files smaller than ``max_file_bytes`` PLUS any file
         carrying a deletion-vector mask (rewriting it purges the mask),
-        rewrites just that set sized to ``target_file_bytes`` (default:
-        ``max_file_bytes``), and leaves every other file as untouched
-        bytes. A no-op (no commit) when fewer than two files qualify and
-        none is masked.
+        rewrites just that set into files of about ``max_file_bytes``,
+        and leaves every other file as untouched bytes. A no-op (no
+        commit) when fewer than two files qualify and none is masked.
 
         ``where_ranges`` (``{col: (lo, hi)}``, either side None for
-        open) restricts the pass to files whose FOOTER stats overlap
-        every bound — the Delta ``OPTIMIZE ... WHERE`` analog on a
-        stats-clustered layout: compact the hot key range, leave the
-        other 99% of a 100 TB table untouched. Files with no usable
-        stats for a bound column stay IN scope (inclusion is always
-        semantics-preserving; exclusion on missing stats could strand
-        exactly the files the caller wants packed)."""
+        open) restricts the pass to the files ``_refuted_by`` (the skip
+        predicate of the snapshot reads) does not refute — the Delta
+        ``OPTIMIZE ... WHERE`` analog on a stats-clustered layout:
+        compact the hot key range, leave the other 99% of a 100 TB table
+        untouched. Files with no usable stats for a bound column, or
+        whose stats are of another type family than the bound, stay IN
+        scope (inclusion is always semantics-preserving; exclusion on
+        missing stats could strand exactly the files the caller wants
+        packed)."""
         state = self._state()
-        in_scope = set(state["files"])
-        if where_ranges:
-            prunable = self._prunable_cols(state, list(where_ranges))
-            mapping = state["column_mapping"]
-            in_scope = set()
-            for rel, meta in state["files"].items():
-                keep = True
-                for c, (lo, hi) in where_ranges.items():
-                    if c not in prunable:
-                        continue
-                    s = meta.get("stats", {}).get(self._phys(mapping, c))
-                    if s is None or s["min"] is None:
-                        continue
-                    if hi is not None and s["min"] > _json_safe(hi):
-                        keep = False
-                        break
-                    if lo is not None and s["max"] < _json_safe(lo):
-                        keep = False
-                        break
-                if keep:
-                    in_scope.add(rel)
+        in_scope = {
+            rel
+            for rel, meta in state["files"].items()
+            if not where_ranges or self._refuted_by(state, meta, where_ranges) is None
+        }
         qualify = sorted(
             r
             for r, m in state["files"].items()
@@ -4627,7 +4573,7 @@ class SnapshotTable:
                 "noop": True,
             }
         total = sum(state["files"][r]["bytes"] for r in qualify)
-        n_out = max(1, -(-total // (target_file_bytes or max_file_bytes)))
+        n_out = max(1, -(-total // max_file_bytes))
         df = self._read_snapshot(state, qualify)  # materializes masks
         adds = self._write_files(
             df.coalesce(int(n_out)), state["cluster_by"], state["column_mapping"]
